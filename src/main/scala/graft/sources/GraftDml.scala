@@ -41,10 +41,10 @@ object GraftDml {
   }
 
   private[sources] def column(e: Expression): Column =
-    org.apache.spark.sql.graftshim.GraftShims.column(e)
+    org.apache.spark.sql.GraftSqlShim.column(e)
 
   private[sources] def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    org.apache.spark.sql.graftshim.GraftShims.ofRows(spark, plan)
+    org.apache.spark.sql.GraftSqlShim.ofRows(spark, plan)
 
   /** User-schema column names of the table at `path`. */
   private[sources] def userColumns(spark: SparkSession, path: String): Seq[String] =

@@ -230,7 +230,7 @@ final class AsyncServices(
       // is re-runnable by design (delete-last + same-target crash
       // recovery) — transient, re-fires next poll; it never mutates
       // committed data. Concurrent lookups are protected by the fold
-      // marker protocol (GraftTable.foldMarkerName): a lookup that races
+      // marker protocol (MappingIndex.writeFoldMarker): a lookup that races
       // a fold's mutation span retries or falls back to its non-index
       // path, and a fold aborted here leaves the marker set, degrading
       // lookups (correctly) until the next successful fold clears it.

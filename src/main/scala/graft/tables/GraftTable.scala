@@ -118,6 +118,10 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
   private val root = new Path(cfg.path)
   private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def rootStr: String = fs.makeQualified(root).toUri.getPath
+  /** The record index and the secondary indexes: one layout, one read
+    * path, one fold ([[MappingIndex]]). */
+  private[tables] val indexes =
+    new MappingIndex(spark, fs, timeline, root, cfg.recordIndexBuckets)
 
   private def keyCol: Column = col(cfg.keyField)
 
@@ -625,13 +629,16 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
   // SPARK JOBS — the driver only ever collects the pruned survivor list
   // (output-sized) and the affected-bucket ids, so at millions of files
   // there is no single JSON whose read/write/parse is an O(#files)
-  // driver bottleneck (the record index pioneered this layout; see
-  // recordIndexDir). A refresh rewrites ONLY the buckets containing new
+  // driver bottleneck (the layout the mapping indexes use, see
+  // MappingIndex). A refresh rewrites ONLY the buckets containing new
   // or dead entries — in ONE dynamic-partition-overwrite job, so the
   // cost is O(affected entries) with a constant job count, not
   // O(buckets) job launches. Crash safety: an interrupted bucket
   // overwrite can only LOSE entries, and a missing entry conservatively
   // keeps its file in every lookup.
+  // It stays outside MappingIndex: its entries are per-file ranges
+  // refreshed in place, with no per-commit dirs, folds or coverage, so it
+  // shares only the parquet walk (MappingIndex.visibleParquet).
 
   /** Bucket count for pre-knob meta files that don't record one. */
   private val ExprIndexDefaultBuckets = 16
@@ -706,13 +713,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     * index dirs read as empty (conservative: nothing prunes). */
   private def readExprEntries(name: String): DataFrame = {
     val dir = exprIndexDir(name)
-    val hasParquet = fs.exists(dir) && {
-      val it = fs.listFiles(dir, true)
-      var found = false
-      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
-    if (!hasParquet)
+    if (!fs.exists(dir) || !MappingIndex.visibleParquet(fs, Seq(dir)).hasNext)
       emptyExprEntries().withColumn("b", lit(0).cast("int"))
     else spark.read.parquet(dir.toString).select("path", "mn", "mx", "b")
   }
@@ -1037,44 +1038,15 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     * read; otherwise key-range stats + bucket index + bloom filters prune. */
   def lookupFiles(keys: Seq[Any]): Seq[FileMeta] = {
     val padded = keys.map(padKey)
-    // RECORD-INDEX path: exact only when the timeline was QUIET across
-    // the read — hits ∩ live must pair an index state with the live set
-    // it describes. Ordering alone cannot give that under concurrent
-    // writers (both failure modes measured by ConcurrencyStress):
-    //   - live pinned BEFORE the index read: an index fold racing newer
-    //     commits purges mappings to files that died after the pin — the
-    //     intersection silently drops the key (pointLookup returned 0);
-    //   - live pinned AFTER: a commit landing between the reads leaves
-    //     its fresh rewrite live but unread in the index — same loss.
-    // So: accept only when latestInstant is unchanged across the whole
-    // read (then every live file's mapping is provably present: its
-    // commit dir landed before its commit, and any fold that purged it
-    // would contradict the file being live now); otherwise retry, and
-    // after churn-exhaustion fall through to range/bucket/bloom pruning,
-    // which is exact on any single consistent snapshot.
-    if (cfg.recordIndexBuckets > 0) {
-      var attempts = 0
-      while (attempts < 4) {
-        attempts += 1
-        val i0 = timeline.latestInstant()
-        recordIndexLookup(padded) match {
-          case Some((paths, indexed)) =>
-            val live = timeline.liveFiles(None)
-            // live files of UNCOVERED instants stay candidates: their
-            // mappings may have been liveness-purged by a fold while they
-            // were dead and then resurrected by rollback/restore — the
-            // pointLookup's key filter keeps the result exact either way
-            def mapped(f: FileMeta): Boolean = f.path.split("/") match {
-              case Array("data", i, _*) => indexed.contains(i)
-              case _ => false // ext:/unrecognized layout — always scan
-            }
-            if (timeline.latestInstant() == i0)
-              return live.filter(f => paths.contains(f.path) || !mapped(f))
-          // a commit landed mid-read: retry against the new quiet point
-          case None => attempts = 4 // no index data yet: prune instead
-        }
+    // RECORD-INDEX path: exact only on a quiet timeline with every live
+    // file of an uncovered instant kept (MappingIndex.read); otherwise
+    // range/bucket/bloom pruning, which is exact on any single consistent
+    // snapshot
+    if (cfg.recordIndexBuckets > 0)
+      indexes.liveFilesFor(indexes.record, indexes.recordRoot, padded) match {
+        case Some(files) => return files
+        case None => ()
       }
-    }
     val live = timeline.liveFiles(None)
     val buckets: Set[Int] =
       if (cfg.numBuckets <= 0) Set.empty
@@ -1207,7 +1179,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
         if (sortCols.nonEmpty) {
           val pinned =
             if (numFiles > 1) { // a 1-file rewrite never samples: skip the pin
-              val (df, rdd) = GraftTable.pinRows(out)
+              val (df, rdd) = graft.GraftSession.pinRows(out)
               pinnedRdd = rdd
               df
             } else out
@@ -1311,8 +1283,12 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
           (Seq(keyStr(keyCol, written).as("_gik"), col("_metadata.file_path").as("_gif")) ++
             siCols.map(c => col(s"`$c`"))): _*).cache()
         try {
-          if (cfg.recordIndexBuckets > 0) writeRecordIndex(instant, proj)
-          writeSecondaryIndex(instant, proj, siCols)
+          if (cfg.recordIndexBuckets > 0)
+            indexes.writeCommit(indexes.record, indexes.recordRoot, instant,
+              proj.select(col("_gik").as("k"), col("_gif")))
+          siCols.foreach(c => indexes.writeCommit(indexes.secondary,
+            indexes.secondaryRoot(c), instant,
+            proj.select(col(s"`$c`").cast("string").as("v"), col("_gif"))))
         } finally proj.unpersist()
       }
 
@@ -1338,7 +1314,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
   /** Reserve an instant and run `body` with it. On ANY failure after the
     * reservation — a data/CDC write error, an invalid batch detected in the
     * stats pass, or a commit-time conflict thrown by Timeline.commit — the
-    * instant's data, changelog, and record-index output are deleted and the
+    * instant's data, changelog, and index output are deleted and the
     * reservation tombstoned, so a failed mutation leaks neither orphan
     * files nor an `.inflight` marker. */
   private[tables] def withReservedInstant[T](body: String => T): T = {
@@ -1376,8 +1352,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
           e.isInstanceOf[InterruptedException] =>
         fs.delete(new Path(s"${cfg.path}/data/$instant"), true)
         fs.delete(new Path(s"${cfg.path}/_graft/cdc/$instant"), true)
-        fs.delete(new Path(s"${cfg.path}/_graft/rli/$instant"), true)
-        deleteSecondaryIndexDirs(instant)
+        indexes.dropInstant(instant)
         timeline.abort(instant)
         // catching the InterruptedException cleared the thread's flag so
         // the cleanup IO above could run; re-assert it for the caller
@@ -1386,119 +1361,18 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     } finally renewer.interrupt()
   }
 
-  /** Append this commit's (record key → data file) mappings to the
-    * record-level index: `_graft/rli/<instant>/b=<bucket>/` parquet keyed
-    * by the padded key string — the Hudi 1.0 record index re-expressed.
-    * Mappings whose data file was later replaced are filtered out at
-    * lookup time by LIVENESS, so rewrites need no index maintenance, and a
-    * commit's index dir lives and dies with the commit (rollback and abort
-    * delete it). One extra column-pruned read of the just-written files +
-    * one small write per commit; at 100 TB a point lookup then reads ONE
-    * hash bucket of the index (O(#commits) small files, bounded by
-    * timeline checkpointing) instead of bloom-probing every candidate
-    * footer. */
-  private def writeRecordIndex(instant: String, proj: DataFrame): Unit = {
-    val rootS = rootStr
-    // store TABLE-RELATIVE paths so liveness checks and index compaction
-    // compare directly against timeline FileMeta paths (built-in
-    // expressions only — no ScalaUDF blocking WSCG in the index job)
-    proj
-      .select(col("_gik").as("k"),
-        GraftTable.relativizeCol(col("_gif"), rootS).as("f"))
-      .withColumn("b", pmod(xxhash64(col("k")), lit(cfg.recordIndexBuckets)))
-      // shuffle BY BUCKET with an EXPLICIT width: a bulk commit's index
-      // write parallelizes across buckets (repartition(1) would push every
-      // key of a 100 TB import through one task), and the explicit N stops
-      // AQE collapsing a small commit's write to one task that serializes
-      // all bucket writers (measured: the single-task write was the
-      // dominant index_write cost at bench scale); partitionBy still sees
-      // whole buckets per task — <= 1 file per bucket per commit
-      .repartition(cfg.recordIndexBuckets, col("b"))
-      .write.mode("overwrite").option("mapreduce.fileoutputcommitter.algorithm.version", "2").partitionBy("b")
-      .parquet(s"${cfg.path}/_graft/rli/$instant")
-    // self-describe the bucket count (like the SI's merged manifest): a
-    // reading handle whose recordIndexBuckets drifted from the writer's
-    // would otherwise probe the WRONG bucket and silently miss rows
-    writeBucketsManifest(new Path(s"${cfg.path}/_graft/rli/$instant"),
-      cfg.recordIndexBuckets)
-  }
-
-  /** Live data files mapped for the given padded keys by the record index;
-    * None when the index has no committed data yet (caller falls back to
-    * range/bucket/bloom pruning). Reads only the index buckets the keys
-    * hash to. */
-  private def recordIndexLookup(padded: Seq[String]): Option[(Set[String], Set[String])] = {
-    val rli = new Path(s"${cfg.path}/_graft/rli")
-    if (!fs.exists(rli)) return None
-    // fold guard: a compaction's adopt phase renames mappings between
-    // visible dirs — unguarded, a concurrent read can miss one entirely
-    // (silent row loss, since callers trust Some(hits)). Rejected/failed
-    // attempts retry on a fresh listing; exhaustion returns None and the
-    // caller's range/bucket/bloom pruning takes over (exact, unpruned).
-    withFoldGuard(rli) { recordIndexLookupOnce(rli, padded) }
-  }
-
-  /** One guarded attempt: (mapped file hits, COVERED instants). Coverage
-    * mirrors the secondary index's: a per-commit dir covers its instant,
-    * a merged dir what its `_covered` manifest claims (manifest-less:
-    * nothing — conservative). The caller must treat live files of
-    * UNCOVERED instants as candidates: a fold liveness-purges mappings to
-    * files that are dead AT FOLD TIME, and a later rollback/restore can
-    * resurrect exactly those files — trusting the merged dir for them
-    * would silently lose their rows. */
-  private def recordIndexLookupOnce(rli: Path,
-      padded: Seq[String]): Option[(Set[String], Set[String])] = {
-    val instantDirs = fs.listStatus(rli).filter(_.isDirectory).map(_.getPath)
-    if (instantDirs.isEmpty) return None
-    val indexed = instantDirs.toSeq.flatMap { d =>
-      if (d.getName.startsWith("merged-")) siCoveredInstants(d)
-      else Seq(d.getName)
-    }.toSet
-    // Bucket ids from each dir's OWN recorded count (the `_buckets`
-    // manifest; manifest-less legacy dirs fall back to this handle's
-    // config, the pre-manifest behavior) — a handle whose config drifted
-    // from the writer's can therefore never probe the wrong bucket. The
-    // driver-local hash twin replaces the old one-row Spark job per
-    // lookup (engine parity spec-pinned with the SI's).
-    val dirs = instantDirs.toSeq.flatMap { d =>
-      val m = siBucketCount(d)
-      val b = if (m > 0) m else cfg.recordIndexBuckets
-      padded.map(k => siValueBucket(k, b)).distinct
-        .map(x => new Path(d, s"b=$x")).filter(fs.exists(_)).map(_.toString)
-    }
-    if (dirs.isEmpty) return Some((Set.empty, indexed))
-    val hits = spark.read.parquet(dirs: _*)
-      .filter(col("k").isin(padded: _*))
-      .select("f").distinct().collect().map(_.getString(0)).toSet
-    Some((hits, indexed))
-  }
-
   /** Record-index-served hit-file TAGGING for keyed COW writes (upsert /
-    * deleteByKeys) — Hudi's record-index write-path tagging re-expressed
-    * (reference: quickstart.sql's upsert flow rides
-    * `hoodie.metadata.record.index.enable` for exactly this probe). The
-    * batch's DISTINCT padded keys JOIN the index (k → file) instead of
-    * opening every candidate data file: the probe bill becomes O(index
-    * buckets the batch hashes to), not O(candidate files) — at 100 TB
-    * the difference between tens of index-bucket reads and thousands of
-    * data-file footer probes per streaming commit.
-    *
-    * Exactness mirrors lookupFiles' record-index contract:
-    *  - mappings are trusted only for candidates of COVERED instants;
-    *    uncovered candidates are returned in `_2` for the caller's
-    *    classic probe (their mappings may have been liveness-purged by a
-    *    fold and the files later resurrected by rollback/restore);
-    *  - the read must see a QUIET timeline (latestInstant unchanged
-    *    across it) — otherwise a racing fold's purge or a racing
-    *    commit's fresh rewrite could hide a mapping; retried, then None;
-    *  - a mapping k → f with f live implies k ∈ f (data files are
-    *    immutable; replacement kills whole files), so index-served hits
-    *    equal the open-and-semi-join probe's exactly — no false
-    *    positives, and coverage + quiet rule out false negatives.
-    * Returns None whenever the index cannot serve (no index data,
-    * timeline churn, fold-guard exhaustion, torn read) — the caller MUST
-    * fall back to the classic candidate probe, exact on any consistent
-    * snapshot. */
+    * deleteByKeys) — Hudi's record-index write-path tagging (reference:
+    * quickstart.sql's upsert flow rides `hoodie.metadata.record.index.enable`
+    * for exactly this probe). The batch's padded keys JOIN the index
+    * ([[MappingIndex.tag]]) instead of opening every candidate data file:
+    * at 100 TB the difference between tens of index-bucket reads and
+    * thousands of footer probes per streaming commit. Returns
+    * (index-served hits, candidates of uncovered instants), or None
+    * whenever the index cannot serve exactly (no index data, timeline
+    * churn, fold-guard exhaustion, torn read) — the caller MUST then fall
+    * back to the classic candidate probe, exact on any consistent
+    * snapshot. Callers pass key-unique frames. */
   private def rliTagHits(batch: DataFrame, cand: Seq[FileMeta])
       : Option[(Seq[FileMeta], Seq[FileMeta])] = {
     // crossover gate: below ~a bucket's worth of candidates the classic
@@ -1506,116 +1380,18 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     // listings + bucket scans — tagging pays off when range/bucket
     // pruning leaves MANY candidates, the only shape that exists at scale
     if (cfg.recordIndexBuckets <= 0 || cand.size < 8) return None
-    try {
-      val rli = new Path(s"${cfg.path}/_graft/rli")
-      if (!fs.exists(rli)) return None
-      var attempts = 0
-      while (attempts < 4) {
-        attempts += 1
-        val i0 = timeline.latestInstant()
-        withFoldGuard(rli) { rliTagOnce(rli, batch) } match {
-          case Some((hitPaths, indexed)) =>
-            if (timeline.latestInstant() == i0) {
-              def mapped(f: FileMeta): Boolean = f.path.split("/") match {
-                case Array("data", i, _*) => indexed.contains(i)
-                case _ => false // ext:/unrecognized layout — always probe
-              }
-              val (cov, uncov) = cand.partition(mapped)
-              return Some((cov.filter(f => hitPaths.contains(f.path)), uncov))
-            } // else a commit landed mid-read: retry at the new quiet point
-          case None => return None
-        }
-      }
-      None
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** One guarded tagging attempt: (paths of live files mapping any batch
-    * key, covered instants). Reads only the index buckets the batch's
-    * keys hash to — per DIR under that dir's own recorded modulus (mixed
-    * moduli after a recordIndexBuckets change are the norm
-    * mid-migration), with ONE list per instant dir (an exists() probe
-    * per wanted bucket would pay more round-trips than it saves at
-    * batch-sized bucket sets). */
-  private def rliTagOnce(rli: Path, batch: DataFrame)
-      : Option[(Set[String], Set[String])] = {
-    val instantDirs = fs.listStatus(rli).filter(_.isDirectory).map(_.getPath)
-    if (instantDirs.isEmpty) return None
-    val indexed = instantDirs.toSeq.flatMap { d =>
-      if (d.getName.startsWith("merged-")) siCoveredInstants(d)
-      else Seq(d.getName)
-    }.toSet
-    // cached: feeds one tiny bucket agg per distinct modulus + the final
-    // semi-join. No .distinct(): callers pass key-unique frames and both
-    // consumers (the per-modulus bucket set, the semi-join) are
-    // duplicate-insensitive — the distinct was a dead exchange per probe
-    val keys = batch.select(keyStr(keyCol, batch).as("k")).cache()
-    try {
-      val byMod = scala.collection.mutable.Map.empty[Int, Set[Long]]
-      def bucketsFor(m: Int): Set[Long] = byMod.getOrElseUpdate(m,
-        keys.select(pmod(xxhash64(col("k")), lit(m.toLong)).as("b"))
-          .distinct().collect().map(_.getLong(0)).toSet)
-      val dirs = instantDirs.toSeq.flatMap { d =>
-        val m0 = siBucketCount(d)
-        val m = if (m0 > 0) m0 else cfg.recordIndexBuckets
-        val want = bucketsFor(m)
-        fs.listStatus(d).filter(_.isDirectory).map(_.getPath).filter { p =>
-          p.getName.startsWith("b=") &&
-            scala.util.Try(p.getName.stripPrefix("b=").toLong)
-              .toOption.exists(want.contains)
-        }.map(_.toString)
-      }
-      if (dirs.isEmpty) Some((Set.empty[String], indexed))
-      else {
-        // the index layout is fixed (k, f) — an explicit schema skips
-        // the inference job and its footer round-trips
-        val hits = spark.read.schema("k STRING, f STRING").parquet(dirs: _*)
-          .join(keys, Seq("k"), "leftsemi")
-          .select("f").distinct().collect().map(_.getString(0)).toSet
-        Some((hits, indexed))
-      }
-    } finally keys.unpersist()
-  }
-
-  /** Append this commit's (secondary-key value → data file) mappings — the
-    * Hudi 1.0 secondary index re-expressed. One `_graft/si/<col>/<instant>/`
-    * parquet of the DISTINCT (value, file) pairs per indexed column: an
-    * equality lookup on a non-key column then reads the small index instead
-    * of scanning every file's data. Like the record index, stale mappings
-    * (to files later replaced) are filtered by LIVENESS at lookup time, and
-    * a commit's index dir lives and dies with the commit's data dir. */
-  private def writeSecondaryIndex(instant: String, proj: DataFrame,
-      siCols: Seq[String]): Unit = {
-    val rootS = rootStr
-    siCols.foreach { c =>
-      // distinct FIRST on the raw absolute name so the codegen'd scan feeds
-      // the shuffle directly; relativization then runs only on the tiny
-      // distinct'd set. No repartition(1): AQE coalesces the small shuffle,
-      // while a large commit's index write stays parallel.
-      proj
-        .select(col(s"`$c`").cast("string").as("v"), col("_gif").as("af"))
-        .distinct()
-        .select(col("v"), GraftTable.relativizeCol(col("af"), rootS).as("f"))
-        .write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .parquet(s"${cfg.path}/_graft/si/$c/$instant")
-    }
-  }
-
-  /** Remove one instant's secondary-index output under every indexed
-    * column (abort/rollback cleanup — listed from disk, not cfg, so a
-    * handle with a stale config still cleans fully). */
-  private def deleteSecondaryIndexDirs(instant: String): Unit = {
-    val si = new Path(s"${cfg.path}/_graft/si")
-    if (fs.exists(si))
-      fs.listStatus(si).filter(_.isDirectory)
-        .foreach(c => fs.delete(new Path(c.getPath, instant), true))
+    try indexes.tag(indexes.record, indexes.recordRoot,
+      batch.select(keyStr(keyCol, batch).as("k")), cand)
+    catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Live data files that may contain rows where `column` equals one of
     * `values`, per the secondary index; None when the column isn't indexed,
-    * the index is empty, or the column's type has no stable string form
-    * (caller falls back to a full-file scan — never a silent mis-prune). */
+    * the index is empty or cannot serve exactly, or the column's type has
+    * no stable string form (caller falls back to a full-file scan — never
+    * a silent mis-prune). Live files of commits that produced no index
+    * dir for the column (a writer whose config lacked it, a schema without
+    * the column, bootstrapped files) are uncovered, so always kept. */
   def secondaryIndexFiles(
       column: String, values: Seq[Any]): Option[Seq[FileMeta]] = {
     if (!cfg.secondaryIndexCols.contains(column)) return None
@@ -1631,55 +1407,8 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
       case _ => false
     }
     if (!stable) return None
-    val siDir = new Path(s"${cfg.path}/_graft/si/$column")
-    if (!fs.exists(siDir)) return None
-    // fold guard: same adopt-phase rename race as the record index — here
-    // an unguarded miss is a silent MIS-PRUNE (the `_covered` manifest
-    // still claims the mapping's commit). Exhaustion returns None and the
-    // caller scans the candidate files unpruned — always correct.
-    withFoldGuard(siDir) { secondaryIndexFilesOnce(siDir, values) }
-  }
-
-  private def secondaryIndexFilesOnce(siDir: Path,
-      values: Seq[Any]): Option[Seq[FileMeta]] = {
-    val instantDirs = fs.listStatus(siDir).filter(_.isDirectory).map(_.getPath)
-    if (instantDirs.isEmpty) return None
-    val wanted = values.map(v => String.valueOf(v))
-    // VALUE-BUCKETED merged dirs (compactSecondaryIndex partitions the fold
-    // by pmod(xxhash64(v), B), recorded in the `_buckets` manifest) are
-    // opened O(selectivity): only the vb= buckets the wanted values hash to
-    // are read. Flat per-commit dirs — few, bounded by compaction cadence —
-    // and legacy un-bucketed merged dirs are read whole. Without this the
-    // equality read was linear in INDEX size even for a value matching one
-    // file (files-axis stress: si_lookup 1.2 s -> 24.3 s over 256 -> 10k
-    // files, all of it spent scanning unmatched index rows).
-    val leafDirs = instantDirs.flatMap { d =>
-      val b = siBucketCount(d)
-      if (b <= 0) Seq(d.toString)
-      else wanted.map(v => siValueBucket(v, b)).distinct
-        .map(x => new Path(d, s"vb=$x")).filter(fs.exists(_)).map(_.toString)
-    }
-    val hits =
-      if (leafDirs.isEmpty) Set.empty[String] // values hash to no written bucket
-      else spark.read.parquet(leafDirs.toSeq: _*)
-        .filter(col("v").isin(wanted: _*))
-        .select("f").distinct().collect().map(_.getString(0)).toSet
-    // Live files from commits that produced NO index dir for this column are
-    // kept conservatively ("unknown", never "no match"): a write path whose
-    // config lacked the index cols, a commit whose schema lacked the column,
-    // or bootstrapped external files would otherwise be silently dropped.
-    // A merged dir (compactSecondaryIndex) stands for the original commit
-    // instants in its _covered manifest; a manifest-less merged dir covers
-    // nothing (its commits' files scan — conservative, never a mis-prune).
-    val indexedInstants = instantDirs.flatMap { pp =>
-      if (pp.getName.startsWith("merged-")) siCoveredInstants(pp)
-      else Seq(pp.getName)
-    }.toSet
-    def mapped(f: FileMeta): Boolean = f.path.split("/") match {
-      case Array("data", instant, _*) => indexedInstants.contains(instant)
-      case _ => false // ext:/unrecognized layout — always scan
-    }
-    Some(timeline.liveFiles(None).filter(f => hits.contains(f.path) || !mapped(f)))
+    indexes.liveFilesFor(indexes.secondary, indexes.secondaryRoot(column),
+      values.map(v => String.valueOf(v)))
   }
 
   /** Equality read through the secondary index: scans ONLY the files the
@@ -1709,579 +1438,31 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     }
   }
 
-  /** Crash recovery for the index folds: a dir already named
-    * merged-<target> is a leftover from a run that crashed between its
-    * fold/adopt writes and the delete-last step, and may hold the ONLY
-    * copy of base mappings renamed out of the previous merged dir — a
-    * blind `overwrite` on that path would destroy them (point lookups
-    * would then silently miss rows; the SI's rebuilt `_covered` manifest
-    * would mis-prune). Rename it aside under a unique name that KEEPS the
-    * `merged-` prefix, so the caller adopts (incremental) or re-folds
-    * (full) it like any other merged source. Safe against a partially
-    * WRITTEN leftover too: Spark parks uncommitted task output under the
-    * hidden `_temporary` dir, which both the fold read (hidden-path
-    * filter) and the adopt renames (non-hidden/.parquet filters) already
-    * skip, while committed task files are complete parquet. */
-  private def recoverLeftoverMerged(mergedDir: Path): Unit = {
-    if (!fs.exists(mergedDir)) return
-    var k = 0
-    var aside = new Path(mergedDir.getParent, s"${mergedDir.getName}.recovered-$k")
-    while (fs.exists(aside)) {
-      k += 1
-      aside = new Path(mergedDir.getParent, s"${mergedDir.getName}.recovered-$k")
-    }
-    fs.rename(mergedDir, aside)
-  }
-
-  /** Name of the fold-in-progress marker inside an index ROOT dir
-    * (`_graft/rli` or `_graft/si/<col>`). Present for the fold's entire
-    * mutation span — written before the first rename/write, deleted only
-    * on SUCCESSFUL completion — so a concurrent lookup can tell "a fold
-    * is moving mappings between the dirs I just listed" apart from stable
-    * state. Without it the adopt phase is a silent-miss window: adoption
-    * RENAMES files from the old merged base into the new merged dir, both
-    * visible, so a reader can list the destination before the move and
-    * the source after it and see the mapping in NEITHER — for the record
-    * index that is silent row loss (lookups trust `Some(hits)`), for the
-    * secondary index a mis-prune (`_covered` still claims the commit).
-    * A crash mid-fold leaves the marker behind ON PURPOSE: the dirs
-    * themselves are in the all-visible crash-safe state, but lookups can
-    * no longer prove a read raced nothing, so they fall back to their
-    * always-correct non-index paths until the next successful fold (the
-    * async service re-fires one every poll) clears it. */
-  private val foldMarkerName = "_folding"
-
-  private def writeFoldMarker(indexRoot: Path): Unit =
-    fs.create(new Path(indexRoot, foldMarkerName), true).close()
-
-  private def clearFoldMarker(indexRoot: Path): Unit = {
-    fs.delete(new Path(indexRoot, foldMarkerName), false); ()
-  }
-
-  private def foldInProgress(indexRoot: Path): Boolean =
-    fs.exists(new Path(indexRoot, foldMarkerName))
-
-  /** Serializes folds per index root WITHIN this JVM: the async service's
-    * thread and a direct compact call (a maintenance op, a test) would
-    * otherwise interleave two folds — the first finisher clears the
-    * marker while the second is still renaming, breaking the marker
-    * invariant lookups depend on. Reentrant (the dead-weight escalation
-    * recurses into `full = true` on the same thread). Cross-PROCESS
-    * maintenance is a single-driver contract, like Hudi's requirement of
-    * a lock provider for multi-writer table services. */
-  private def withFoldLock[T](indexRoot: Path)(body: => T): T =
-    GraftTable.foldLocks
-      .computeIfAbsent(indexRoot.toString, _ => new Object)
-      .synchronized(body)
-
-  /** Runs one index-read body under fold-race detection; the body must
-    * list `indexRoot` fresh on every evaluation. An attempt is ACCEPTED
-    * only when no fold marker was visible on either side of the read AND
-    * the root's directory listing is unchanged across it — any fold
-    * overlapping the read trips one of the three checks (its marker spans
-    * all its mutations; a fold that ran START-TO-END inside the read has
-    * already deleted its source dirs, changing the listing). Rejected
-    * attempts — including a read that crashed on a source dir deleted
-    * mid-flight — retry against the fold's crash-safe on-disk state.
-    * After `attempts` rejected tries (a long fold in flight, or a crashed
-    * fold's leftover marker) returns None: every caller falls back to its
-    * non-index path, which is always correct, just unpruned. */
+  /** [[MappingIndex.guarded]] for a body that lists `indexRoot` itself. */
   private[tables] def withFoldGuard[T](indexRoot: Path, attempts: Int = 4)
-      (body: => Option[T]): Option[T] = {
-    var i = 0
-    while (i < attempts) {
-      i += 1
-      if (!foldInProgress(indexRoot)) {
-        val before = fs.listStatus(indexRoot).filter(_.isDirectory)
-          .map(_.getPath.getName).toSet
-        val out: Option[Option[T]] =
-          try Some(body)
-          catch { case e if GraftTable.isTornRead(e) => None }
-        val after = fs.listStatus(indexRoot).filter(_.isDirectory)
-          .map(_.getPath.getName).toSet
-        out match {
-          case Some(v) if before == after && !foldInProgress(indexRoot) => return v
-          case _ => () // raced a fold (or its crash): retry on a fresh listing
-        }
-      }
-      // adopt phases are driver-side renames (ms): a short pause usually
-      // outlives the race without ceding the lookup to the fallback path
-      if (i < attempts)
-        try Thread.sleep(50L * i) catch {
-          case _: InterruptedException =>
-            // re-assert the flag so a shutdown/stop aimed at this thread
-            // isn't silently swallowed by the guard's retry pause
-            Thread.currentThread().interrupt()
-            return None
-        }
-    }
-    None
-  }
+      (body: => Option[T]): Option[T] =
+    indexes.guarded(indexRoot, attempts)(_ => body)
 
-  /** Shared fold prologue for both index compactions: decide the
-    * consumable source dirs under the marker protocol, or None for a
-    * no-op (stale crash markers cleared either way).
-    *   1. A lone merged-<latest> with NO other sources is a previous
-    *      fold's COMPLETED result, not a crash leftover — leave it in
-    *      place (unless `full`, the documented purge; the dead-weight
-    *      escalation recurses into that).
-    *   2. A merged-<target> NEXT TO other sources is a leftover from a
-    *      run that crashed before its delete-last step; its recovery
-    *      RENAME is already a mutation concurrent lookups must not race
-    *      unguarded — marker first (see [[foldMarkerName]]).
-    *   3. NEVER consume a concurrent writer's IN-FLIGHT index dir (index
-    *      dirs land BEFORE their commit): the liveness filter would drop
-    *      every one of its not-yet-live mappings and delete-last would
-    *      destroy them — the commit then lands permanently unindexed
-    *      (ConcurrencyStress measured point lookups losing exactly the
-    *      rows of commits that raced a fold trigger; for the SI it is a
-    *      permanent mis-prune once a later fold's _covered claims the
-    *      instant). A dir is protected while its instant holds a live
-    *      .inflight reservation; it becomes consumable at the next fold,
-    *      after its commit lands (kept) or its crashed writer is fenced
-    *      (correctly liveness-dropped). Listing the SOURCES first and the
-    *      reservations after keeps the race closed: any dir visible in
-    *      the source listing provably reserved its instant EARLIER, so by
-    *      reservation-snapshot time that reservation is either still
-    *      inflight (dir protected) or resolved — committed (the fold's
-    *      later liveness list sees the commit) or fenced (correctly
-    *      liveness-dropped). The other order leaves a hole: a writer that
-    *      reserves after the reservation snapshot but whose index dir
-    *      lands before the source listing would be consumed mid-flight
-    *      and its commit would land permanently unindexed. */
-  private def foldSources(root: Path, mergedName: String,
-      full: Boolean): Option[Array[Path]] = {
-    if (!full && !fs.listStatus(root).exists(s =>
-        s.isDirectory && s.getPath.getName != mergedName)) {
-      clearFoldMarker(root)
-      return None
-    }
-    if (fs.exists(new Path(root, mergedName))) writeFoldMarker(root)
-    recoverLeftoverMerged(new Path(root, mergedName))
-    val listed = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filterNot(_.getName == mergedName)
-    val inflight = timeline.inflightReservations().keySet
-    val old = listed.filterNot(d => inflight.contains(d.getName))
-    // re-running with no new commits is a no-op; stable state (any
-    // recovery rename above has completed), so lookups resume the index
-    if (old.length <= 1 && !(full && old.length == 1)) {
-      clearFoldMarker(root)
-      None
-    } else Some(old)
-  }
-
-  /** True when any fold-source dir holds at least one COMMITTED parquet
-    * file (hidden path segments — `_temporary`, `_SUCCESS` — excluded,
-    * matching Spark's own listing filter). Guards the fold's parquet read:
-    * a recovered leftover can legitimately be empty (crash right after
-    * mkdirs), and schema inference over only-empty dirs would throw. */
-  private def visibleParquetExists(dirs: Seq[Path]): Boolean = dirs.exists { d =>
-    val base = d.toUri.getPath
-    val it = fs.listFiles(d, true)
-    var found = false
-    while (!found && it.hasNext) {
-      val f = it.next().getPath
-      val rel = f.toUri.getPath.stripPrefix(base).stripPrefix("/")
-      val hidden = rel.split("/").exists(s => s.startsWith("_") || s.startsWith("."))
-      if (!hidden && f.getName.endsWith(".parquet")) found = true
-    }
-    found
-  }
-
-  /** Fold per-commit record-index directories into ONE merged dir,
-    * dropping folded mappings whose data file is no longer live — the
-    * index-maintenance analogue of [[checkpointTimeline]] for years-lived
-    * tables (a lookup otherwise reads O(#commits) index dirs).
-    *
-    * INCREMENTAL by default (the Hudi metadata-compaction shape): only
-    * commits SINCE the last compaction are read, shuffled, and
-    * liveness-filtered; an existing merged base is ADOPTED by renaming its
-    * per-bucket files into the new merged dir — O(#buckets) filesystem
-    * metadata ops, zero data movement. At 100 TB this is the difference
-    * between a compaction that costs O(new commits) and one that re-reads
-    * and re-shuffles the table's whole live key set every time. The price:
-    * adopted base files keep mappings to since-replaced data files (the
-    * lookup's liveness filter already discards those, so correctness is
-    * unaffected). That dead weight is BOUNDED: when footer row counts
-    * prove the base majority-dead (base rows > 2x live rows), the fold
-    * auto-escalates to `full = true` and purges — merged-dir size stays
-    * within 2x the live mapping set under any churn pattern, without
-    * anyone having to remember periodic full folds.
-    *
-    * Crash-safe without a lock, lossless at every step: the delta fold is
-    * written FIRST (crash → one extra dir, duplicate mappings are harmless
-    * — lookups take the distinct union); base files then MOVE (rename, not
-    * copy — a partial move leaves every file in exactly one of the two
-    * dirs, still all visible to lookups); source dirs are deleted LAST.
-    * A re-run that targets the SAME latest instant as the crashed run
-    * first renames the leftover merged dir aside and consumes it as a
-    * source ([[recoverLeftoverMerged]]) — never overwrites it, since it
-    * can hold the only copy of previously-adopted base mappings.
+  /** Fold per-commit record-index dirs into ONE merged dir
+    * ([[MappingIndex.compact]]) — the index-maintenance analogue of
+    * [[checkpointTimeline]] for years-lived tables. Incremental by default
+    * (new dirs liveness-filtered, the merged base adopted by rename),
+    * escalated to a purging full fold when footer row counts prove the
+    * base majority-dead; a full fold proves coverage back from entry
+    * counts.
     *
     * @return the number of source dirs consumed (folded deltas + adopted
     *         base), 0 when there is nothing to do. */
   def compactRecordIndex(full: Boolean = false): Int = {
     require(cfg.recordIndexBuckets > 0, s"table ${cfg.path} has no record index")
-    val rli = new Path(s"${cfg.path}/_graft/rli")
-    if (!fs.exists(rli)) return 0
-    withFoldLock(rli)(compactRecordIndexLocked(rli, full))
+    indexes.compact(indexes.record, indexes.recordRoot, full, 0)
   }
 
-  private def compactRecordIndexLocked(rli: Path, full: Boolean): Int = {
-    val mergedName = s"merged-${timeline.latestInstant().getOrElse(Timeline.pad(0))}"
-    val old = foldSources(rli, mergedName, full) match {
-      case None => return 0
-      case Some(dirs) => dirs
-    }
-    // adopt-by-rename is only sound when the base's recorded bucket count
-    // matches this fold's (bucket ids must agree file-for-file); a base
-    // written under a drifted/legacy count is re-folded instead — the
-    // fold recomputes b from k, so the merged dir always ends with ONE
-    // consistent layout under the current count
-    val (adopt, foldSrc) =
-      if (full) (Array.empty[Path], old)
-      else old.partition(p => p.getName.startsWith("merged-") &&
-        siBucketCount(p) == cfg.recordIndexBuckets)
-    // DEAD-WEIGHT escalation: adopt-by-rename carries mappings to since-
-    // replaced files forever — without a bound, the liveness filter's input
-    // grows without limit over a table's life (the disease the fold cures,
-    // one level up). Every live row has AT MOST one live mapping in the
-    // base, so base rows > 2x live rows proves the base is majority-dead;
-    // escalate to a full fold, which re-reads and purges. Row counts come
-    // from parquet FOOTERS (driver-side, no job), so the check is free.
-    if (adopt.nonEmpty) {
-      val baseRows = committedParquetRows(adopt.toSeq)
-      val liveRows = timeline.liveFiles(None).map(_.rows).sum
-      if (baseRows > 2L * math.max(liveRows, 1L)) return compactRecordIndex(full = true)
-    }
-    // marker spans every mutation below (fold write, adopt renames,
-    // manifest, source deletes); cleared only on the success path
-    writeFoldMarker(rli)
-    // Liveness snapshot taken BEFORE the merged dir exists: the coverage
-    // recheck at the manifest write compares a fresh timeline read against
-    // exactly this set, which closes the cross-process rollback race in
-    // every interleaving (see the manifest-write note below).
-    val liveAtFold = timeline.liveFiles(None).map(_.path)
-    val mergedDir = new Path(s"${cfg.path}/_graft/rli/$mergedName")
-    if (foldSrc.nonEmpty && visibleParquetExists(foldSrc)) {
-      val live = liveAtFold
-      val liveDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(live.map(org.apache.spark.sql.Row(_)), 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("f", org.apache.spark.sql.types.StringType))))
-      // recursive lookup: skips partition inference across the per-commit
-      // roots (the bucket is recomputed from the key below anyway)
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(foldSrc.map(_.toString).toSeq: _*)
-        .join(liveDf, Seq("f"), "leftsemi")
-        .withColumn("b", pmod(xxhash64(col("k")), lit(cfg.recordIndexBuckets)))
-        // by-bucket shuffle, not repartition(1): a full fold covers the
-        // LIVE KEY SET of the whole table — the one index job that must
-        // scale (the incremental path only ever shuffles the new commits).
-        // Explicit width: AQE would collapse a small fold to one task
-        // serializing every bucket's writer
-        .repartition(cfg.recordIndexBuckets, col("b"))
-        .write.mode("overwrite").option("mapreduce.fileoutputcommitter.algorithm.version", "2").partitionBy("b")
-        .parquet(mergedDir.toString)
-    }
-    // adopt the previous merged base: move each bucket file under the new
-    // merged dir, name-prefixed by its origin so delta part files can
-    // never collide with it. An already-adopted file keeps its name (its
-    // part-file UUID is unique) — re-prefixing would grow filenames by
-    // ~20 chars per compaction, unbounded over a table's life
-    adopt.foreach { base =>
-      // hidden dirs (an uncommitted _temporary from a crashed fold write in
-      // a recovered leftover) are not bucket dirs — never adopt from them
-      fs.listStatus(base).filter(d => d.isDirectory &&
-          !d.getPath.getName.startsWith("_") && !d.getPath.getName.startsWith("."))
-        .foreach { bucket =>
-        val destBucket = new Path(mergedDir, bucket.getPath.getName)
-        fs.mkdirs(destBucket)
-        fs.listStatus(bucket.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .foreach { f =>
-            val n = f.getPath.getName
-            val dest = if (n.startsWith("adopt-")) n
-              else s"adopt-${base.getName}-$n"
-            fs.rename(f.getPath, new Path(destBucket, dest))
-          }
-      }
-    }
-    if (fs.exists(mergedDir)) {
-      writeBucketsManifest(mergedDir, cfg.recordIndexBuckets)
-      // Coverage manifest. The point lookup treats files of UNCOVERED
-      // instants as permanent candidates — the contract that keeps
-      // rollback/restore sound: a fold liveness-purges mappings to dead
-      // files, and a rollback that RESURRECTS those files must be able to
-      // un-claim their instants (fuzz-found: restore after compact+fold
-      // silently lost the resurrected base rows from indexed lookups).
-      //
-      // INCREMENTAL folds claim the union of the consumed dirs' coverage
-      // (per-commit dirs their instant name, merged bases their manifest),
-      // read HERE — after the fold writes, right before this manifest
-      // write — never from an earlier snapshot: a rollback completing
-      // anywhere before this point has already rewritten the source
-      // manifests, and the union then reflects its un-claims. FULL folds
-      // recompute coverage from first principles instead (every mapping is
-      // in `mergedDir`, so per-file mapping counts vs footer row counts
-      // PROVE which instants' live files are fully mapped) — which also
-      // heals pre-manifest legacy merged dirs and rollback-un-claimed
-      // instants that the union could only carry forward conservatively.
-      val claimed =
-        if (full) provenRecordIndexCoverage(mergedDir)
-        else old.toSeq.flatMap(p =>
-          if (p.getName.startsWith("merged-")) siCoveredInstants(p)
-          else Seq(p.getName))
-      // RECHECK + write + post-write recheck loop, as the last steps before
-      // source deletion: a rollback whose merged-dir scan could MISS this
-      // mergedDir listed dirs before the fold created it, so its commit-file
-      // delete is visible to a recheck's fresh timeline read — files live
-      // NOW but dead in the fold's liveness snapshot are exactly the
-      // resurrected ones whose mappings this fold filtered out; their
-      // instants must not be claimed. The post-write loop (see
-      // writeCoveredManifestRechecked) closes the sub-ms window between a
-      // pre-write recheck and the write itself.
-      writeCoveredManifestRechecked(mergedDir, claimed, liveAtFold.toSet)
-    }
-    old.foreach(p => fs.delete(p, true))
-    clearFoldMarker(rli)
-    old.length
-  }
-
-  /** Name of the coverage manifest inside a merged secondary-index dir:
-    * one ORIGINAL commit instant per line. The lookup's "is this file's
-    * commit mapped?" conservatism test needs the original instant names
-    * after compaction deletes their per-commit dirs; the underscore
-    * prefix keeps parquet readers from treating it as data. */
-  private val siCoveredManifest = "_covered"
-
-  private def siCoveredInstants(dir: Path): Seq[String] = {
-    val m = new Path(dir, siCoveredManifest)
-    if (!fs.exists(m)) return Seq.empty
-    val in = fs.open(m)
-    val txt =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    txt.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
-  /** (Re)write a merged index dir's coverage manifest. Every failure mode
-    * of a racing reader is conservative: a missing/empty/torn manifest
-    * claims less coverage, and uncovered files are always scanned. */
-  private def writeCoveredManifest(dir: Path, covered: Seq[String]): Unit = {
-    val out = fs.create(new Path(dir, siCoveredManifest), true)
-    try out.write(covered.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Write a merged dir's coverage manifest with a POST-write resurrection
-    * recheck loop. The pre-write recheck alone leaves a sub-ms cross-process
-    * window: a rollback that completes AFTER the pre-write recheck reads the
-    * timeline but BEFORE the manifest hits disk finds no manifest to
-    * un-claim (its merged-dir scan sees a dir with no `_covered`, a no-op),
-    * yet the write then claims the resurrected instants. Closing it: after
-    * every write, re-run the recheck and REWRITE if new resurrections
-    * appeared, looping until a write is followed by a recheck that removes
-    * nothing. Each iteration strictly shrinks the claim set, so the loop
-    * terminates; a rollback finishing before the final recheck is caught by
-    * the rewrite, and one starting after it sees the written manifest and
-    * un-claims it itself — no interleaving escapes both. */
-  private def writeCoveredManifestRechecked(
-      dir: Path, claimed: Seq[String], liveAtFold: Set[String]): Unit = {
-    var covered = claimed.distinct.sorted.filterNot(resurrectedSince(liveAtFold))
-    writeCoveredManifest(dir, covered)
-    var stable = false
-    while (!stable) {
-      val again = covered.filterNot(resurrectedSince(liveAtFold))
-      if (again == covered) stable = true
-      else { covered = again; writeCoveredManifest(dir, covered) }
-    }
-  }
-
-  /** Instants of files live NOW but NOT live in `liveAtFold` — files a
-    * rollback/restore resurrected while a fold was in flight. A fold's
-    * liveness filter (taken at `liveAtFold`) dropped exactly those files'
-    * mappings, so claiming their instants would be the silent-row-loss
-    * bug the coverage manifest exists to prevent; every fold calls this
-    * with a FRESH timeline read immediately before its manifest write
-    * (the interleaving proof lives at the RLI fold's write site). New
-    * concurrent COMMITS also add never-before-live files, but their fresh
-    * instants are never in a fold's claim set, so they are unaffected. */
-  private def resurrectedSince(liveAtFold: Set[String]): Set[String] =
-    timeline.liveFiles(None).map(_.path).filterNot(liveAtFold)
-      .flatMap(_.split("/") match {
-        case Array("data", i, _*) => Some(i)
-        case _ => None
-      }).toSet
-
-  /** Exact coverage of a FULLY refolded record index, proven from the
-    * merged mappings themselves: an instant is covered iff EVERY live
-    * data file of it has one mapping per footer row in `mergedDir` (keys
-    * are unique within a data file — precombine dedups each commit's
-    * batch — so distinct-key count == row count proves completeness; any
-    * shortfall under-claims, which is conservative: uncovered files are
-    * always scanned). This is what lets a full fold HEAL coverage that
-    * only degrades under the union rule — pre-manifest legacy merged dirs
-    * (which claim nothing) and instants un-claimed by a rollback whose
-    * files have since been re-mapped. One aggregate over the just-written
-    * merged index (already O(live keys) — the full fold's own cost). */
-  private def provenRecordIndexCoverage(mergedDir: Path): Seq[String] = {
-    // a full fold whose liveness filter dropped every mapping (a table
-    // emptied by deletes — exactly the state dead-weight escalation
-    // recurses into full=true on) writes an empty partitioned dir; parquet
-    // schema inference over it throws. Under-claiming is defined
-    // conservative, so an empty merged index claims nothing.
-    if (!visibleParquetExists(Seq(mergedDir))) return Seq.empty
-    val mapped = spark.read.option("recursiveFileLookup", "true")
-      .parquet(mergedDir.toString)
-      .groupBy("f").agg(countDistinct("k").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    timeline.liveFiles(None)
-      .flatMap(f => f.path.split("/") match {
-        case Array("data", i, _*) => Some(i -> f)
-        case _ => None // ext:/unrecognized — never claimable, always scanned
-      })
-      .groupBy(_._1)
-      .collect { case (i, fm) if fm.forall { case (_, f) =>
-          mapped.getOrElse(f.path, 0L) >= f.rows } => i }
-      .toSeq
-  }
-
-  /** Name of the value-bucket-count manifest inside a merged secondary-index
-    * dir: the B its `vb=` layout was hashed with. Self-describing — a reader
-    * never depends on the writing handle's config, and a dir without the
-    * manifest (per-commit dirs, legacy merged dirs, a fold still in flight)
-    * is simply read whole, conservatively. */
-  private val siBucketsManifest = "_buckets"
-
-  private def siBucketCount(dir: Path): Int = {
-    val m = new Path(dir, siBucketsManifest)
-    if (!fs.exists(m)) return 0
-    val in = fs.open(m)
-    val txt =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    scala.util.Try(txt.trim.toInt).getOrElse(0)
-  }
-
-  private def writeBucketsManifest(dir: Path, b: Int): Unit = {
-    val out = fs.create(new Path(dir, siBucketsManifest), true)
-    try out.write(b.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Bucket id of one index value under B value-buckets — the DRIVER-LOCAL
-    * twin of the engine expression the fold writes with
-    * (`pmod(xxhash64(v), B)`: XxHash64 seed 42 over the UTF-8 string), so
-    * an equality lookup computes its target buckets without a Spark job.
-    * Parity is pinned by TablesSpec against the engine-computed ids. */
-  private[graft] def siValueBucket(v: String, b: Int): Long = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    val h = new XxHash64(Seq(Literal.create(v,
-      org.apache.spark.sql.types.StringType))).eval(null).asInstanceOf[Long]
-    ((h % b) + b) % b
-  }
-
-  /** Total size of COMMITTED parquet under the dirs (hidden segments
-    * excluded) — sizes the merged fold's value-bucket count without an
-    * extra Spark job. */
-  private def visibleParquetBytes(dirs: Seq[Path]): Long = dirs.map { d =>
-    val base = d.toUri.getPath
-    val it = fs.listFiles(d, true)
-    var sum = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      val rel = f.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
-      val hidden = rel.split("/").exists(s => s.startsWith("_") || s.startsWith("."))
-      if (!hidden && f.getPath.getName.endsWith(".parquet")) sum += f.getLen
-    }
-    sum
-  }.sum
-
-  private def visibleParquetFiles(dirs: Seq[Path]): Seq[(Path, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Path, Long)]
-    dirs.foreach { d =>
-      val base = d.toUri.getPath
-      val it = fs.listFiles(d, true)
-      while (it.hasNext) {
-        val st = it.next()
-        val f = st.getPath
-        val rel = f.toUri.getPath.stripPrefix(base).stripPrefix("/")
-        val hidden = rel.split("/").exists(s => s.startsWith("_") || s.startsWith("."))
-        if (!hidden && f.getName.endsWith(".parquet")) out += ((f, st.getLen))
-      }
-    }
-    out.toSeq
-  }
-
-  /** Row count of the COMMITTED parquet under the dirs from footers alone
-    * — no data read. Small dir sets (the common fold-time shape: one
-    * merged base of O(#buckets) files) count on the bounded driver pool;
-    * above the harvest threshold the count runs as a Spark job with
-    * map-side partial sums, the same two-tier rule as the commit-time
-    * stats harvest. Feeds the incremental folds' dead-weight escalation
-    * check. */
-  private def committedParquetRows(dirs: Seq[Path]): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val files = visibleParquetFiles(dirs)
-    if (files.isEmpty) return 0L
-    if (files.size <= GraftTable.footerHarvestDriverMax(spark)) {
-      import scala.collection.parallel.CollectionConverters._
-      val pc = files.par
-      pc.tasksupport = GraftTable.footerHarvestPool
-      pc.map { case (p, len) =>
-        // length from the enclosing listing: no per-file HEAD (see
-        // footerKeyStatsAt)
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(
-          new org.apache.hadoop.fs.FileStatus(len, false, 1, 0L, 0L, p),
-          spark.sparkContext.hadoopConfiguration))
-        try {
-          var n = 0L
-          r.getFooter.getBlocks.forEach(b => n += b.getRowCount)
-          n
-        } finally r.close()
-      }.sum
-    } else {
-      val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-      val slices = math.min(files.size,
-        math.max(spark.sparkContext.defaultParallelism * 4, 32))
-      spark.sparkContext.parallelize(
-          files.map { case (p, len) => (p.toString, len) }, slices)
-        .mapPartitions { ps =>
-          val conf = sconf.value
-          var n = 0L
-          ps.foreach { case (s, len) =>
-            val r = ParquetFileReader.open(HadoopInputFile.fromStatus(
-              new org.apache.hadoop.fs.FileStatus(len, false, 1, 0L, 0L,
-                new Path(s)), conf))
-            try r.getFooter.getBlocks.forEach(b => n += b.getRowCount)
-            finally r.close()
-          }
-          Iterator.single(n)
-        }.fold(0L)(_ + _)
-    }
-  }
-
-  /** Fold per-commit secondary-index dirs for `column` into ONE merged
-    * dir — [[compactRecordIndex]]'s exact analogue for the value index,
-    * closing the same O(#commits)-dirs lookup degradation. Incremental by
-    * default: only commit dirs since the last compaction are read and
-    * liveness-filtered; an existing merged base is adopted by rename
-    * (zero data movement); `full = true` re-folds everything, purging
-    * adopted dead mappings (auto-escalated when a column-pruned count
-    * proves the base majority-dead, so dead weight stays bounded without
-    * scheduled full folds). The merged dir is PARTITIONED BY VALUE BUCKET
-    * (`vb = pmod(xxhash64(v), B)`, B recorded in a `_buckets` manifest),
-    * so an equality lookup opens O(selectivity) of the index instead of
-    * scanning it whole. It also carries a `_covered` manifest
-    * of the original commit instants it stands for, so
-    * [[secondaryIndexFiles]] still knows which commits are mapped (files
-    * from unmapped commits stay conservatively scanned). Crash-safe in
-    * the same write-first / rename / delete-last order.
+  /** Fold per-commit secondary-index dirs for `column` into ONE merged dir
+    * — the same fold as [[compactRecordIndex]]. The merged dir is
+    * PARTITIONED BY VALUE BUCKET (`vb = pmod(xxhash64(v), B)`, B recorded
+    * in a `_buckets` manifest), so an equality lookup opens
+    * O(selectivity) of the index instead of scanning it whole.
     *
     * @param buckets explicit value-bucket count for the merged layout
     *                (0 = auto-size from the fold's bytes at ~8 MB per
@@ -2293,140 +1474,20 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
       buckets: Int = 0): Int = {
     require(cfg.secondaryIndexCols.contains(column),
       s"column $column is not secondary-indexed on ${cfg.path}")
-    val siDir = new Path(s"${cfg.path}/_graft/si/$column")
-    if (!fs.exists(siDir)) return 0
-    withFoldLock(siDir)(compactSecondaryIndexLocked(siDir, column, full, buckets))
+    indexes.compact(indexes.secondary, indexes.secondaryRoot(column), full, buckets)
   }
 
-  private def compactSecondaryIndexLocked(siDir: Path, column: String,
-      full: Boolean, buckets: Int): Int = {
-    val mergedName = s"merged-${timeline.latestInstant().getOrElse(Timeline.pad(0))}"
-    val old = foldSources(siDir, mergedName, full) match {
-      case None => return 0
-      case Some(dirs) => dirs
-    }
-    val mergedOld = old.filter(_.getName.startsWith("merged-"))
-    // A merged base is adopted by rename ONLY when every base records the
-    // same value-bucket count (bucket ids must agree file-for-file with the
-    // new fold); legacy un-bucketed or mixed-B bases are re-folded instead,
-    // so the merged dir always ends with ONE consistent vb= layout.
-    val baseB = mergedOld.map(siBucketCount).distinct
-    val adoptable = !full && mergedOld.nonEmpty && baseB.length == 1 &&
-      baseB.head >= 1 && (buckets <= 0 || buckets == baseB.head)
-    // DEAD-WEIGHT escalation (compactRecordIndex's twin): SI rows are
-    // distinct (value, file) pairs, so live data rows can't bound them —
-    // instead ONE column-pruned leftsemi count of the base against the
-    // live file set measures dead weight exactly. When the base is
-    // majority-dead, fall through to a full re-fold, which purges it. The
-    // count reads the f column only (dictionary-encoded, no shuffle — the
-    // tiny live list broadcasts) and runs once per compaction.
-    val escalate = adoptable && {
-      val baseRows = committedParquetRows(mergedOld.toSeq)
-      baseRows > 0L && {
-        val live = timeline.liveFiles(None).map(_.path)
-        val liveDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(live.map(org.apache.spark.sql.Row(_)), 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("f", org.apache.spark.sql.types.StringType))))
-        val baseLive = spark.read.option("recursiveFileLookup", "true")
-          .parquet(mergedOld.map(_.toString).toSeq: _*)
-          .select("f").join(broadcast(liveDf), Seq("f"), "leftsemi").count()
-        baseRows > 2L * math.max(baseLive, 1L)
-      }
-    }
-    if (escalate) return compactSecondaryIndex(column, full = true, buckets)
-    // marker spans every mutation below (fold write, adopt renames,
-    // manifests, source deletes); cleared only on the success path
-    writeFoldMarker(siDir)
-    val (adopt, foldSrc) =
-      if (adoptable) old.partition(_.getName.startsWith("merged-"))
-      else (Array.empty[Path], old)
-    // liveness snapshot BEFORE the merged dir exists — the coverage
-    // recheck below compares a fresh timeline read against exactly this
-    // set (interleaving proof at the RLI fold's manifest-write site)
-    val liveAtFold = timeline.liveFiles(None).map(_.path)
-    val mergedDir = new Path(siDir, mergedName)
-    // value-bucket count: an adopted base's is REUSED (its files keep their
-    // bucket ids); otherwise sized from the fold's committed bytes at ~8 MB
-    // per bucket — a small index folds to one bucket (no per-commit file
-    // blowup, the parquet-bloom lesson), a 10k-file table's index spreads so
-    // an equality lookup opens O(selectivity) of it
-    val bCount =
-      if (adoptable) baseB.head
-      else if (buckets > 0) buckets
-      else math.min(256L, math.max(1L,
-        (visibleParquetBytes(old.toSeq) + (8L << 20) - 1) / (8L << 20))).toInt
-    if (foldSrc.nonEmpty && visibleParquetExists(foldSrc)) {
-      val liveDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(liveAtFold.map(org.apache.spark.sql.Row(_)), 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("f", org.apache.spark.sql.types.StringType))))
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(foldSrc.map(_.toString).toSeq: _*)
-        .join(liveDf, Seq("f"), "leftsemi")
-        .withColumn("vb", pmod(xxhash64(col("v")), lit(bCount)))
-        // by-bucket shuffle: a full fold covers the table's whole value
-        // set and must parallelize across buckets, like the RLI fold
-        // (explicit width: see the RLI fold note on AQE collapse)
-        .repartition(bCount, col("vb"))
-        .write.mode("overwrite").option("mapreduce.fileoutputcommitter.algorithm.version", "2").partitionBy("vb")
-        .parquet(mergedDir.toString)
-    } else fs.mkdirs(mergedDir)
-    adopt.foreach { base =>
-      fs.listStatus(base)
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("vb="))
-        .foreach { bucket =>
-          val destBucket = new Path(mergedDir, bucket.getPath.getName)
-          fs.mkdirs(destBucket)
-          fs.listStatus(bucket.getPath)
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .foreach { f =>
-              // keep already-adopted names (UUID-unique) — see compactRecordIndex
-              val n = f.getPath.getName
-              val dest = if (n.startsWith("adopt-")) n
-                else s"adopt-${base.getName}-$n"
-              fs.rename(f.getPath, new Path(destBucket, dest))
-            }
-        }
-    }
-    // bucket manifest BEFORE coverage: a lookup racing the fold either sees
-    // no _buckets (reads the dir whole — conservative) or the final layout
-    writeBucketsManifest(mergedDir, bCount)
-    // coverage union read HERE — after the fold writes, right before the
-    // manifest write (sources are deleted only below, so their manifests
-    // are still on disk): a rollback completing anywhere before this point
-    // has already rewritten the source manifests. Then the resurrection
-    // recheck + post-write recheck loop (interleaving proof at the RLI
-    // fold's manifest-write site and writeCoveredManifestRechecked).
-    val claimed = old.flatMap(p =>
-      if (p.getName.startsWith("merged-")) siCoveredInstants(p)
-      else Seq(p.getName)).toSeq
-    writeCoveredManifestRechecked(mergedDir, claimed, liveAtFold.toSet)
-    old.foreach(p => fs.delete(p, true))
-    clearFoldMarker(siDir)
-    old.length
-  }
-
-  /** Rebuild `column`'s secondary index FROM THE LIVE DATA — the
-    * backfill/repair form of [[compactSecondaryIndex]] (Hudi's index
-    * backfill re-expressed). Consumes every existing index dir for the
-    * column (in-flight writers' dirs excluded, like the fold) and replaces
-    * them with ONE merged dir derived from a scan of the live data files
-    * themselves: distinct (value, file) pairs, value-bucketed like a fold.
-    * Because every live table-managed file is fully mapped by
-    * construction, the `_covered` manifest claims EVERY instant with live
-    * `data/` files — this is the SI's coverage-HEAL path. Coverage only
-    * degrades under the incremental fold's union rule (a pre-manifest
-    * legacy merged dir claims nothing; a rollback un-claims resurrected
-    * instants permanently), and unlike the record index — whose FULL fold
-    * proves coverage back from mapping-vs-row counts — a refold of SI
-    * dirs cannot prove per-value completeness, so the only exact repair
-    * is this re-derivation from data. O(live data) read of two columns:
-    * a scheduled-maintenance op, not a per-commit one.
-    *
-    * Also the BACKFILL path: a table whose `secondaryIndexCols` gained
-    * `column` after data already existed starts with zero index dirs and
-    * fully-conservative lookups; one rebuild indexes the whole history.
+  /** Rebuild `column`'s secondary index FROM THE LIVE DATA — the fold of
+    * [[compactSecondaryIndex]] with the live data files as its source
+    * (Hudi's index backfill re-expressed, [[MappingIndex.rebuild]]): every
+    * index dir for the column is replaced by ONE merged dir of the
+    * distinct (value, file) pairs of the live files, claiming EVERY
+    * instant with live `data/` files. This is the SI's coverage-HEAL
+    * path: coverage only degrades under the incremental fold's union rule,
+    * and unlike the record index a refold of SI dirs cannot prove
+    * per-value completeness. Also the BACKFILL path for a column indexed
+    * after data already existed. O(live data) read of two columns: a
+    * scheduled-maintenance op, not a per-commit one.
     *
     * @param buckets explicit value-bucket count (0 = auto-size from live
     *                row count at ~2M rows per bucket, capped at 256)
@@ -2434,64 +1495,24 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
   def rebuildSecondaryIndex(column: String, buckets: Int = 0): Int = {
     require(cfg.secondaryIndexCols.contains(column),
       s"column $column is not secondary-indexed on ${cfg.path}")
-    val siDir = new Path(s"${cfg.path}/_graft/si/$column")
-    fs.mkdirs(siDir)
-    withFoldLock(siDir) {
-      val mergedName =
-        s"merged-${timeline.latestInstant().getOrElse(Timeline.pad(0))}"
-      // same marker protocol as the folds: spans every mutation below, so
-      // concurrent lookups' fold guards retry/fall back instead of racing
-      // the source deletion; recover a crashed run's leftover first
-      writeFoldMarker(siDir)
-      recoverLeftoverMerged(new Path(siDir, mergedName))
-      // never consume an in-flight writer's index dir (lands before its
-      // commit — deleting it would leave that commit permanently unindexed)
-      val inflight = timeline.inflightReservations().keySet
-      val old = fs.listStatus(siDir).filter(_.isDirectory).map(_.getPath)
-        .filterNot(d => inflight.contains(d.getName))
-      val liveAtFold = timeline.liveFiles(None)
-      // ext: (bootstrapped) files are never coverage-claimable (their
-      // lookup conservatism is path-shape-based), so mapping them buys
-      // nothing — skip the read
-      val dataFiles = liveAtFold.filterNot(_.path.startsWith("ext:"))
-      val mergedDir = new Path(siDir, mergedName)
-      val bCount =
-        if (buckets > 0) buckets
-        else math.min(256L, math.max(1L,
-          dataFiles.map(_.rows).sum / (2L << 20) + 1)).toInt
-      if (dataFiles.nonEmpty) {
-        // mergeSchema: files written before a schema_add lack the column —
-        // their rows map to null, which no equality lookup matches, so
-        // claiming them covered is exact (no row in them can equal any
-        // looked-up value)
-        val df = spark.read.option("mergeSchema", "true")
-          .parquet(dataFiles.map(f => dataPath(f.path)): _*)
-        val vcol =
-          if (df.columns.contains(column)) col(s"`$column`").cast("string")
-          else lit(null).cast("string")
-        df.select(vcol.as("v"),
-            GraftTable.relativizeCol(col("_metadata.file_path"), rootStr).as("f"))
-          .distinct()
-          .withColumn("vb", pmod(xxhash64(col("v")), lit(bCount)))
-          .repartition(bCount, col("vb"))
-          .write.mode("overwrite").option("mapreduce.fileoutputcommitter.algorithm.version", "2").partitionBy("vb")
-          .parquet(mergedDir.toString)
-      } else fs.mkdirs(mergedDir)
-      writeBucketsManifest(mergedDir, bCount)
-      // claim every instant with live data files, minus any resurrected
-      // by a rollback racing this rebuild (same recheck + post-write loop
-      // as the folds; proof at compactRecordIndexLocked's write site)
-      val claimed = dataFiles.flatMap(_.path.split("/") match {
-          case Array("data", i, _*) => Some(i)
-          case _ => None
-        })
-      writeCoveredManifestRechecked(mergedDir, claimed,
-        liveAtFold.map(_.path).toSet)
-      old.foreach(p => fs.delete(p, true))
-      clearFoldMarker(siDir)
-      old.length
-    }
+    indexes.rebuild(indexes.secondary, indexes.secondaryRoot(column), buckets, { files =>
+      // mergeSchema: files written before a schema_add lack the column —
+      // their rows map to null, which no equality lookup matches, so
+      // claiming them covered is exact
+      val df = spark.read.option("mergeSchema", "true")
+        .parquet(files.map(f => dataPath(f.path)): _*)
+      val vcol =
+        if (df.columns.contains(column)) col(s"`$column`").cast("string")
+        else lit(null).cast("string")
+      df.select(vcol.as("v"),
+          GraftTable.relativizeCol(col("_metadata.file_path"), rootStr).as("f"))
+        .distinct()
+    })
   }
+
+  /** Bucket id of one index value under B buckets, computed on the driver
+    * ([[MappingIndex.valueBucket]]; engine parity pinned by TablesSpec). */
+  private[graft] def siValueBucket(v: String, b: Int): Long = MappingIndex.valueBucket(v, b)
 
   /** Instance form of [[GraftTable.footerKeyStatsOf]] bound to this
     * table's key/stats config — the driver-side call sites. */
@@ -2984,45 +2005,50 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     * variant of `cluster`, like Hudi's z-order layout optimization): rows
     * close in EVERY dimension land in the same files, so per-file min/max
     * stats prune range queries on any clustered column. Content unchanged. */
-  def clusterZOrder(sortCols: Seq[String], numFiles: Int): String = withReservedInstant { instant =>
+  def clusterZOrder(sortCols: Seq[String], numFiles: Int): String = {
     require(sortCols.size >= 2, "clusterZOrder needs at least 2 columns")
-    val live = timeline.liveFiles(None)
-    val snap = resolve(readFiles(live))
-    val cols = presentCols(snap)
-    // one job computes every dimension's min/max
-    val r = snap.agg(
-      sortCols.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double")))).head,
-      sortCols.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double")))).tail: _*).head()
-    val dims = sortCols.zipWithIndex.map { case (c, i) =>
-      require(!r.isNullAt(2 * i),
-        s"clusterZOrder($c) requires non-null numeric values in every column")
-      (col(c), r.getDouble(2 * i), r.getDouble(2 * i + 1))
+    // parsed BEFORE the instant is reserved: a bad value fails the call
+    // with the key named and leaves the table untouched
+    val pinMax = spark.conf.getOption(GraftTable.ZOrderPinMaxKey).map(v => v.trim.toLongOption.getOrElse(
+      throw new IllegalArgumentException(s"${GraftTable.ZOrderPinMaxKey} must be a byte count, got '$v'")))
+      .getOrElse(4L << 30)
+    withReservedInstant { instant =>
+      val live = timeline.liveFiles(None)
+      val snap = resolve(readFiles(live))
+      val cols = presentCols(snap)
+      // one job computes every dimension's min/max
+      val r = snap.agg(
+        sortCols.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double")))).head,
+        sortCols.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double")))).tail: _*).head()
+      val dims = sortCols.zipWithIndex.map { case (c, i) =>
+        require(!r.isNullAt(2 * i),
+          s"clusterZOrder($c) requires non-null numeric values in every column")
+        (col(c), r.getDouble(2 * i), r.getDouble(2 * i + 1))
+      }
+      val z = graft.functions.ZOrder.zValueN(dims)
+      val zSnap = snap.selectExpr(cols.map(c => s"`$c`"): _*).withColumn("_graft_z", z)
+      // pin before the range repartition: the bound-sampling job would
+      // otherwise re-scan the whole table and recompute every z-value.
+      // SIZE-GATED: this is a WHOLE-TABLE rewrite, so the pin stores a full
+      // table copy on executor-local memory/disk — fine for the small/medium
+      // tables the pin was measured on, but a multi-TB cluster would trade an
+      // object-store re-scan for local-disk exhaustion. Above the threshold
+      // (conf `spark.graft.zorder.pinMaxBytes`, default 4 GiB of live file
+      // length from commit metadata) the pin is skipped and the rewrite pays
+      // the sampling re-scan — the bounded, scale-safe cost.
+      val liveBytes = live.map(_.len).sum
+      val (zin, zrdd) =
+        if (liveBytes <= pinMax) graft.GraftSession.pinRows(zSnap)
+        else (zSnap, null)
+      val out = zin
+        .repartitionByRange(numFiles, col("_graft_z"))
+        .sortWithinPartitions("_graft_z")
+        .drop("_graft_z")
+      val adds = try writeFiles(out, instant)
+        finally if (zrdd != null) zrdd.unpersist(blocking = false)
+      commitValidated(Commit(instant, "cluster", adds, live.map(_.path)))
+      instant
     }
-    val z = graft.functions.ZOrder.zValueN(dims)
-    val zSnap = snap.selectExpr(cols.map(c => s"`$c`"): _*).withColumn("_graft_z", z)
-    // pin before the range repartition: the bound-sampling job would
-    // otherwise re-scan the whole table and recompute every z-value.
-    // SIZE-GATED: this is a WHOLE-TABLE rewrite, so the pin stores a full
-    // table copy on executor-local memory/disk — fine for the small/medium
-    // tables the pin was measured on, but a multi-TB cluster would trade an
-    // object-store re-scan for local-disk exhaustion. Above the threshold
-    // (conf `spark.graft.zorder.pinMaxBytes`, default 4 GiB of live file
-    // length from commit metadata) the pin is skipped and the rewrite pays
-    // the sampling re-scan — the bounded, scale-safe cost.
-    val liveBytes = live.map(_.len).sum
-    val pinMax = spark.conf.getOption("spark.graft.zorder.pinMaxBytes")
-      .map(_.toLong).getOrElse(4L << 30)
-    val (zin, zrdd) =
-      if (liveBytes <= pinMax) GraftTable.pinRows(zSnap)
-      else (zSnap, null)
-    val out = zin
-      .repartitionByRange(numFiles, col("_graft_z"))
-      .sortWithinPartitions("_graft_z")
-      .drop("_graft_z")
-    val adds = try writeFiles(out, instant)
-      finally if (zrdd != null) zrdd.unpersist(blocking = false)
-    commitValidated(Commit(instant, "cluster", adds, live.map(_.path)))
-    instant
   }
 
   /** Two-column z-order clustering (compat overload). */
@@ -3119,8 +2145,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     c.adds.filterNot(_.path.startsWith("ext:"))
       .foreach(f => fs.delete(new Path(s"${cfg.path}/${f.path}"), false))
     fs.delete(new Path(s"${cfg.path}/_graft/cdc/$instant"), true)
-    fs.delete(new Path(s"${cfg.path}/_graft/rli/$instant"), true)
-    deleteSecondaryIndexDirs(instant)
+    indexes.dropInstant(instant)
     fs.delete(new Path(s"${cfg.path}/_graft/$instant.commit.json"), false)
     // Deleting the commit RESURRECTS every file it had replaced — and any
     // index fold that ran while the commit was live liveness-purged those
@@ -3128,42 +2153,8 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     // A merged dir still CLAIMING their instants would make indexed
     // lookups silently miss the resurrected rows (fuzz-found: restore
     // after compact+fold lost the original base rows from SI equality).
-    // Un-claim the resurrected instants from every merged coverage
-    // manifest: their files then scan conservatively (exact, unpruned)
-    // until normal churn rewrites them under indexed instants. A torn
-    // manifest read races conservative, so no lock is needed.
-    val resurrected = c.removes.flatMap(_.split("/") match {
-      case Array("data", i, _*) => Some(i)
-      case _ => None
-    }).toSet
-    if (resurrected.nonEmpty) {
-      val siRoot = new Path(s"${cfg.path}/_graft/si")
-      val roots = Seq(new Path(s"${cfg.path}/_graft/rli")) ++
-        (if (fs.exists(siRoot))
-          fs.listStatus(siRoot).filter(_.isDirectory).map(_.getPath).toSeq
-        else Nil)
-      // Per-root fold lock: an IN-JVM fold (the async service's thread, a
-      // direct compact call) reads its sources' manifests and writes the
-      // merged claim under this same lock — rewriting them mid-fold here
-      // would let the fold's new merged dir re-claim exactly the instants
-      // this loop un-claims (the resurrected files' mappings were
-      // liveness-purged at fold time → silent row loss on indexed
-      // lookups). Cross-PROCESS folds are closed by the folds themselves:
-      // each re-reads source manifests and rechecks the timeline for
-      // resurrected files immediately before writing its claim (see the
-      // manifest-write note in compactRecordIndexLocked).
-      roots.filter(fs.exists(_)).foreach { root =>
-        withFoldLock(root) {
-          fs.listStatus(root)
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("merged-"))
-            .foreach { m =>
-              val cov = siCoveredInstants(m.getPath)
-              val kept = cov.filterNot(resurrected)
-              if (kept.size != cov.size) writeCoveredManifest(m.getPath, kept)
-            }
-        }
-      }
-    }
+    val resurrected = c.removes.flatMap(MappingIndex.instantOf).toSet
+    if (resurrected.nonEmpty) indexes.unclaim(resurrected)
     // tombstone: the instant number is never reused, so commits cached by
     // other table handles can never be re-bound to different data
     timeline.abort(instant)
@@ -3389,10 +2380,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
       if (f.isFile && name.endsWith(".parquet") &&
           !name.startsWith(".") && !name.startsWith("_")) {
         val rel = f.getPath.toUri.getPath.stripPrefix(rootStr).stripPrefix("/")
-        val reserved = rel.split("/") match {
-          case Array("data", instant, _*) => protectedInstants.contains(instant)
-          case _ => false
-        }
+        val reserved = MappingIndex.instantOf(rel).exists(protectedInstants)
         if (!reserved && !referenced.contains(rel) && f.getModificationTime < cutoff &&
             fs.delete(f.getPath, false)) deleted += 1
       }
@@ -3443,21 +2431,6 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
 }
 
 object GraftTable {
-  /** Dedicated bounded pool for the parallel footer harvest. The default
-    * parallel-collections task support rides the JVM-global pool, which
-    * under load competes with the local[N] executor threads (and anything
-    * else in the process) for the same cores — the one code-environment
-    * interaction that could make the FS-heavy table family swell under a
-    * loaded machine while every other family stays flat. 16 threads keep
-    * the IO-bound footer reads (~16 ms each) fully overlapped without
-    * ever stealing more than half the box; on a real cluster the harvest
-    * runs as an executor map instead. */
-  /** One monitor per index-root path: serializes same-JVM folds (see
-    * [[GraftTable.withFoldLock]]). Keyed by absolute root string so two
-    * handles on the same table share the lock. */
-  private[tables] val foldLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** True when a FileNotFoundException appears anywhere in the cause
     * chain — how a Spark job surfaces a file deleted between listing and
     * scan (a lookup racing a fold's delete-last step). */
@@ -3491,6 +2464,15 @@ object GraftTable {
     case _ => false
   }
 
+  /** Dedicated bounded pool for the parallel footer harvest. The default
+    * parallel-collections task support rides the JVM-global pool, which
+    * under load competes with the local[N] executor threads (and anything
+    * else in the process) for the same cores — the one code-environment
+    * interaction that could make the FS-heavy table family swell under a
+    * loaded machine while every other family stays flat. 16 threads keep
+    * the IO-bound footer reads (~16 ms each) fully overlapped without
+    * ever stealing more than half the box; on a real cluster the harvest
+    * runs as an executor map instead. */
   private[tables] lazy val footerHarvestPool =
     new scala.collection.parallel.ForkJoinTaskSupport(
       new java.util.concurrent.ForkJoinPool(
@@ -3501,18 +2483,14 @@ object GraftTable {
   def apply(spark: SparkSession, cfg: GraftTableConfig): GraftTable =
     new GraftTable(spark, cfg)
 
-  /** Range-repartitioned writes pin their child first: see
-    * [[graft.GraftSession.pinRows]] (RangePartitioner.sketch otherwise
-    * recomputes the whole child lineage for bound sampling). */
-  private[tables] def pinRows(df: DataFrame): (
-      DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) =
-    graft.GraftSession.pinRows(df)
-
   /** Floor for [[GraftTable.rewriteFileCount]]'s per-file row target. Low
     * enough that any healthy table's average dominates it (a 128 MB file
     * of 100 B rows holds ~1.3M rows); high enough that a fragmented
     * table's rewrites consolidate instead of splinter. */
   private[tables] val RewriteMinRowsPerFile = 1000L
+
+  /** Live-byte ceiling for pinning the z-order rewrite's input. */
+  private val ZOrderPinMaxKey = "spark.graft.zorder.pinMaxBytes"
 
   /** Table-relative form of an `input_file_name()`-style absolute name.
     * input_file_name() returns a URI-encoded string (spaces as %20 etc.);

@@ -83,24 +83,15 @@ object TableServices {
     * point re-runnable. Returns source dirs consumed across all indexes
     * (0 = below every threshold). */
   def maybeCompactIndexes(table: GraftTable, maxDirs: Int = 20): Int = {
-    val fs = new Path(table.cfg.path).getFileSystem(
-      table.spark.sparkContext.hadoopConfiguration)
-    def dirCount(p: Path): Int =
-      if (!fs.exists(p)) 0 else fs.listStatus(p).count(_.isDirectory)
-    // A leftover `_folding` marker (a fold crashed mid-mutation) degrades
-    // EVERY point/SI lookup to the unpruned fallback plus the guard's
-    // retry pauses until a fold clears it — and on a read-mostly table the
-    // dir count may never cross `maxDirs` again. So the marker itself is a
-    // fold trigger: the fold re-runs the crash recovery (or no-ops) and
-    // clears the marker either way, restoring index-pruned lookups.
-    def needsFold(p: Path): Boolean =
-      dirCount(p) > maxDirs || fs.exists(new Path(p, "_folding"))
+    // a leftover fold marker is a trigger too (MappingIndex.needsFold): the
+    // fold re-runs the crash recovery (or no-ops) and clears the marker
+    // either way, restoring index-pruned lookups
+    val idx = table.indexes
     var consumed = 0
-    if (table.cfg.recordIndexBuckets > 0 &&
-        needsFold(new Path(s"${table.cfg.path}/_graft/rli")))
+    if (table.cfg.recordIndexBuckets > 0 && idx.needsFold(idx.recordRoot, maxDirs))
       consumed += table.compactRecordIndex()
     table.cfg.secondaryIndexCols.foreach { c =>
-      if (needsFold(new Path(s"${table.cfg.path}/_graft/si/$c")))
+      if (idx.needsFold(idx.secondaryRoot(c), maxDirs))
         consumed += table.compactSecondaryIndex(c)
     }
     consumed
