@@ -82,8 +82,10 @@ object Bench {
     import scala.jdk.CollectionConverters._
     def gcMillis: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).filter(_ > 0).sum
+    // err: the exception class and message of an op that threw, so a
+    // throw never reads as a fast op
     final case class OpStat(sec: Double, gcMs: Long, leaseRetries: Long,
-        fsCalls: Map[String, Long])
+        fsCalls: Map[String, Long], err: Option[String])
 
     // MACHINE-LOAD SENTINEL: a fixed pair of reference micro-ops — one
     // CPU/shuffle-bound, one FS/commit-shaped (small parquet write + read,
@@ -162,12 +164,13 @@ object Bench {
       // (d_incr_dedup timed 0.24 s while its actual shingle join costs
       // seconds). toRdd executes the plan that produces the full rows a
       // real consumer would read.
-      try { fn(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case _: Throwable => -1L }
+      val err =
+        try { fn(spark, sfDir).queryExecution.toRdd.count(); None }
+        catch { case e: Throwable => Some(s"${e.getClass.getName}: ${e.getMessage}") }
       val dt = (System.nanoTime() - t0) / 1e9
       val stat = OpStat(dt, gcMillis - gc0,
         graft.tables.Timeline.lockRetries.get() - lr0,
-        graft.sources.FsCalls.delta(fs0))
+        graft.sources.FsCalls.delta(fs0), err)
       // untimed inter-query cleanup: queries are independent, so blocks a
       // query cached (or localCheckpointed) must not squeeze the next one's
       // execution memory — the GC lets the ContextCleaner drop orphaned
@@ -178,6 +181,8 @@ object Bench {
     }
     snapSentinel("end")
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val failed = results.count(_._2.err.nonEmpty)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f3(v.sec) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2.sec).sum else 0.0
@@ -214,7 +219,8 @@ object Bench {
       val fsJson = v.fsCalls.toSeq.sortBy(_._1)
         .map { case (op, n) => "\"" + op + "\":" + n }.mkString("{", ",", "}")
       "\"" + k + "\":{\"sec\":" + f3(v.sec) + ",\"gc_ms\":" + v.gcMs +
-        ",\"lease_retries\":" + v.leaseRetries + ",\"fs\":" + fsJson + "}"
+        ",\"lease_retries\":" + v.leaseRetries + ",\"fs\":" + fsJson +
+        ",\"err\":" + mapper.writeValueAsString(v.err.orNull) + "}"
     }.mkString("{", ",", "}")
     val sentinelJson = sentinels.map { case (tag, (c, f, la)) =>
       "\"" + tag + "\":{\"cpu_sec\":" + f3(c) + ",\"fs_sec\":" + f3(f) +
@@ -264,7 +270,6 @@ object Bench {
       // 8 runs, best-warm floor — and a second triage pass embeds the
       // floors so the artifact ships with a FINAL verdict on every row,
       // never an unaccompanied "suspect a code change".
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val triage = mapper.readTree(
         new java.io.File(artifactDir, "BENCH_TRIAGE.json"))
       // floor every row whose verdict is not yet FINAL: flagged rows, and
@@ -325,7 +330,7 @@ object Bench {
       "\"" + f + "_" + vs.size + "ops\":" + f3(vs.sum)
     }.mkString("{", ",", "}")
     val slim =
-      s"""{"queries":$famJson,"ops":${results.size},"mean_sec_per_op":${f3(
+      s"""{"queries":$famJson,"ops":${results.size},"failed":$failed,"mean_sec_per_op":${f3(
         if (results.isEmpty) 0.0 else total / results.size)},"detail":"BENCH_SELF.json","sf":"$sfDir","unit":"sec","metric":"total","value":${f3(total)}}"""
     // the slim line also lands at a fixed path: stdout can be re-prefixed
     // by launchers (sbt's logger wrote `[info] {...}` in round 9, which no
@@ -333,5 +338,9 @@ object Bench {
     writeArtifact("BENCH_SLIM.json", slim)
     println(slim)
     spark.stop()
+    if (failed > 0) {
+      System.err.println(s"[bench] $failed op(s) threw: see err in BENCH_SELF.json")
+      sys.exit(1)
+    }
   }
 }

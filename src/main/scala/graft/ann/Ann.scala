@@ -862,8 +862,9 @@ object Ann extends QueryRegistry {
     // cosine evaluations of the deepest point alone (1+1+2+2+4+4 vs 4
     // bucket-units). eager: `scored` feeds the rank and the scanned-count
     // subtrees, which AQE fires concurrently (GraftSession.eager doc).
-    val npDf = broadcast(Seq(1L, 2L, 4L).toDF("nprobe"))
-    val probes = probesAll.filter(col("prn") <= 4)
+    val nprobes = Seq(1L, 2L, 4L)
+    val npDf = broadcast(nprobes.toDF("nprobe"))
+    val probes = probesAll.filter(col("prn") <= nprobes.max.toInt)
     val scored = graft.GraftSession.eager(
       assigned.join(broadcast(probes), col("bucket") === col("bucket_p"))
         .filter(col("vec_id") =!= col("q_id"))
@@ -871,7 +872,9 @@ object Ann extends QueryRegistry {
         .select(col("q_id"), col("vec_id"), col("cos_r"), col("prn")))
     // per-(q, np) rank: the ordering ends in the unique vec_id, so the
     // point sets are identical to the per-point rankTopK's; a partition
-    // holds one probe set's candidates, bounded by the nprobe cap
+    // holds one probe set's candidates — at most `nprobes.max` buckets,
+    // but as many rows as those buckets hold (the cap bounds the bucket
+    // count, not the rows per bucket)
     val wRank = Window.partitionBy("q_id", "nprobe")
       .orderBy(desc("cos_r"), asc("vec_id"))
     val ranked = scored.join(npDf, col("prn") <= col("nprobe"))

@@ -84,7 +84,7 @@ private[sources] object GraftProcedures {
           StructField("rows_added", LongType))),
         (s, in) => {
           val t = table(s, in)
-          (t.timeline.archivedInstants() ++ t.timeline.instants()).distinct.sorted.map { i =>
+          t.timeline.committedInstants().map { i =>
             val c = t.timeline.readCommit(i)
             new GenericInternalRow(Array[Any](
               str(c.instant), str(c.op), c.adds.size, c.removes.size,

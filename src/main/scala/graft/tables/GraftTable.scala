@@ -220,12 +220,12 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     * only the removed PATHS; the metas (and the files) outlive the remove
     * until `clean`, the same availability contract CDC already has. */
   private def fileMetasByPath(paths: Set[String]): Seq[FileMeta] =
-    (timeline.archivedInstants() ++ timeline.instants()).distinct.sorted
+    timeline.committedInstants()
       .flatMap(i => timeline.readCommit(i).adds.filter(f => paths(f.path)))
       .distinctBy(_.path)
 
   private def addCommits(asOf: Option[String]): Map[String, (String, Boolean)] =
-    (timeline.archivedInstants() ++ timeline.instants()).distinct.sorted
+    timeline.committedInstants()
       .filter(i => asOf.forall(i <= _))
       .flatMap { i =>
         val c = timeline.readCommit(i)
@@ -438,7 +438,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     require(cfg.writeChangelog, s"table ${cfg.path} was not created with writeChangelog")
     // archived commits still serve CDC (changelog files + commit metadata
     // outlive timeline archival; only `clean` erases history)
-    val range = (timeline.archivedInstants() ++ timeline.instants()).distinct.sorted
+    val range = timeline.committedInstants()
       .filter(i => i > beginExclusive && i <= endInclusive)
     require(range.nonEmpty, s"no commits in ($beginExclusive, $endInclusive]")
     def tag(df: DataFrame, i: String): DataFrame =
@@ -948,9 +948,9 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     * [[withReservedInstant]] deletes the instant's data/CDC/index output
     * and tombstones the reservation, making the rejection atomic. */
   private def commitValidated(c: Commit): Unit = {
-    val vs = validators
-    if (vs.nonEmpty && !layoutOps(c.op) && (c.adds.nonEmpty || c.removes.nonEmpty))
-      graft.sources.FsCalls.withPhase("precommit_validate") {
+    val vs =
+      if (layoutOps(c.op) || (c.adds.isEmpty && c.removes.isEmpty)) Nil else validators
+    if (vs.nonEmpty) graft.sources.FsCalls.withPhase("precommit_validate") {
       val removed = c.removes.toSet
       val files = timeline.liveFiles(None).filterNot(f => removed(f.path)) ++ c.adds
       val candidate =
@@ -1350,10 +1350,15 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
       // damage than the reaper path.
       case e if scala.util.control.NonFatal(e) ||
           e.isInstanceOf[InterruptedException] =>
-        fs.delete(new Path(s"${cfg.path}/data/$instant"), true)
-        fs.delete(new Path(s"${cfg.path}/_graft/cdc/$instant"), true)
-        indexes.dropInstant(instant)
-        timeline.abort(instant)
+        // a throw AFTER the commit landed (an interrupt first seen by a
+        // post-commit unpersist) leaves a published instant whose files
+        // are live: cleaning it up would delete committed data
+        if (!fs.exists(new Path(s"${cfg.path}/_graft/$instant.commit.json"))) {
+          fs.delete(new Path(s"${cfg.path}/data/$instant"), true)
+          fs.delete(new Path(s"${cfg.path}/_graft/cdc/$instant"), true)
+          indexes.dropInstant(instant)
+          timeline.abort(instant)
+        }
         // catching the InterruptedException cleared the thread's flag so
         // the cleanup IO above could run; re-assert it for the caller
         if (e.isInstanceOf[InterruptedException]) Thread.currentThread().interrupt()
@@ -1544,6 +1549,9 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
   private def presentCols(df: DataFrame): Seq[String] =
     userCols(df) ++ GraftMeta.cols.filter(df.columns.contains)
 
+  private def project(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.selectExpr(cols.map(c => s"`$c`"): _*)
+
   /** Bulk insert (append-only, no key collision handling) — the fast path,
     * like the reference's bulk loads. Applies precombine within the batch. */
   def insert(batch: DataFrame, numFiles: Int = 0,
@@ -1577,33 +1585,11 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     }
   }
 
-  private def upsertResolved(batch0: DataFrame, op: String,
+  private def upsertResolved(batch: DataFrame, op: String,
       commitMeta: Map[String, String] = Map.empty): String = {
     ensureConfig()
-    if (timeline.liveFiles(None).isEmpty) insert(batch0, commitMeta = commitMeta)
-    else withReservedInstant { instant =>
-      val live = timeline.liveFiles(None)
-      val batch = batch0.cache()
-      try {
-        // prune candidate files by batch key range + bucket set — ONE
-        // aggregation job computes both (min/max key + distinct buckets)
-        val aggCols = Seq(
-          min(keyStr(keyCol, batch)).as("mn"), max(keyStr(keyCol, batch)).as("mx"),
-          count(lit(1)).as("cnt")) ++
-          (if (cfg.numBuckets > 0) Seq(collect_set(bucketOf(keyCol)).as("bk")) else Nil)
-        val rangeRow = batch.agg(aggCols.head, aggCols.tail: _*).head()
-        if (rangeRow.isNullAt(0)) { // empty batch: record a no-op commit
-          commitValidated(Commit(instant, op, Nil, Nil, commitMeta))
-        } else {
-          val batchBuckets: Set[Int] =
-            if (cfg.numBuckets <= 0) Set.empty
-            else rangeRow.getSeq[Long](3).map(_.toInt).toSet
-          upsertNonEmpty(batch, live, instant, op, commitMeta,
-            rangeRow.getString(0), rangeRow.getString(1), rangeRow.getLong(2), batchBuckets)
-        }
-        instant
-      } finally batch.unpersist()
-    }
+    if (timeline.liveFiles(None).isEmpty) insert(batch, commitMeta = commitMeta)
+    else keyedCommit(op, batch, Some(batch), commitMeta)
   }
 
   /** Output file count for a rewrite of `rows` total rows, sized to the
@@ -1668,87 +1654,136 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
       cand.filter(f => hits.contains(f.path))
     }
 
-  private def upsertNonEmpty(batch: DataFrame, live: Seq[FileMeta],
-      instant: String, op: String, commitMeta: Map[String, String],
-      bMin: String, bMax: String, batchRows: Long, batchBuckets: Set[Int]): Unit = {
-    val cand = live.filter { f =>
-      val rangeOk = f.minKey <= bMax && bMin <= f.maxKey
-      val bucketOk = cfg.numBuckets <= 0 || f.bucketMod != cfg.numBuckets ||
-        batchBuckets.contains(f.bucket)
-      rangeOk && bucketOk
+  /** The one keyed COW commit, behind upsert, merge and partialUpsert
+    * (`newRows` = the precombined batch), COW deleteByKeys (no new rows)
+    * and applyChangelog's fused path (`keys` = the last action per changed
+    * key, `newRows` = its upserts). Every stored row of a key in `keys` is
+    * replaced by `newRows` or deleted. `keys` must be key-unique: the probe
+    * and the carry anti-join trust that instead of paying a distinct. It is
+    * cached for the commit, so frames derived from it (`newRows`) read the
+    * cache. ONE aggregation job gives the key range, row count and bucket
+    * set; files whose key range or bucket cannot hold a batch key are
+    * pruned; the survivors are tagged through the record index, and what
+    * the index cannot serve goes through the classic probe. */
+  private def keyedCommit(op: String, keys: DataFrame, newRows: Option[DataFrame],
+      commitMeta: Map[String, String] = Map.empty): String =
+    withReservedInstant { instant =>
+      val live = timeline.liveFiles(None)
+      val batch = keys.cache()
+      try {
+        // buckets of the key as STORED: a batch key of another integral
+        // type hashes differently and would prune the file that holds it
+        def storedKey = readSchema().flatMap(_.find(_.name == cfg.keyField))
+          .fold(keyCol)(f => keyCol.cast(f.dataType))
+        val aggCols = Seq(
+          min(keyStr(keyCol, batch)).as("mn"), max(keyStr(keyCol, batch)).as("mx"),
+          count(lit(1)).as("cnt")) ++
+          (if (cfg.numBuckets > 0) Seq(collect_set(bucketOf(storedKey)).as("bk")) else Nil)
+        val r = batch.agg(aggCols.head, aggCols.tail: _*).head()
+        if (r.isNullAt(0)) // empty batch: record a no-op commit
+          commitValidated(Commit(instant, op, Nil, Nil, commitMeta))
+        else {
+          val (bMin, bMax) = (r.getString(0), r.getString(1))
+          val buckets: Set[Int] =
+            if (cfg.numBuckets <= 0) Set.empty else r.getSeq[Long](3).map(_.toInt).toSet
+          val cand = live.filter { f =>
+            f.minKey <= bMax && bMin <= f.maxKey &&
+              (cfg.numBuckets <= 0 || f.bucketMod != cfg.numBuckets || buckets.contains(f.bucket))
+          }
+          // index-served tagging first (its bill rides the batch's index
+          // buckets, not the candidate count); candidates of uncovered
+          // instants, and everything when the index can't serve exactly,
+          // go through the classic open-and-semi-join probe
+          val hitFiles =
+            if (cand.isEmpty) Seq.empty[FileMeta]
+            else graft.sources.FsCalls.withPhase("candidate_probe") {
+              rliTagHits(batch, cand) match {
+                case Some((idxHits, unmapped)) => idxHits ++ probeCandidates(batch, unmapped)
+                case None => probeCandidates(batch, cand)
+              }
+            }
+          val batchKeys = batch.select(keyCol)
+          rewriteCommit(instant, op, live, hitFiles,
+            carry = _.join(batchKeys, Seq(cfg.keyField), "leftanti"),
+            doomed = _.join(batchKeys, Seq(cfg.keyField), "leftsemi"),
+            newRows.map(_ -> r.getLong(2)), commitMeta)
+        }
+      } finally batch.unpersist()
+      instant
     }
 
-    val (hitFiles, affected) =
-      if (cand.isEmpty) (Seq.empty[FileMeta], None)
-      else graft.sources.FsCalls.withPhase("candidate_probe") {
-        // index-served tagging first (probe bill rides the batch's index
-        // buckets, not the candidate count); candidates of uncovered
-        // instants — and everything, when the index can't serve exactly —
-        // go through the classic open-and-semi-join probe
-        val hit = rliTagHits(batch, cand) match {
-          case Some((idxHits, unmapped)) =>
-            idxHits ++ probeCandidates(batch, unmapped)
-          case None => probeCandidates(batch, cand)
+  /** The one COW rewrite tail, shared by [[keyedCommit]] and
+    * delete(predicate). The hit files are read once (`affected`, cached:
+    * the rewrite and the CDC images both scan them). The stored rows
+    * `carry` keeps are written with the new rows beside them, sized like
+    * the files they replace and key-range sorted, and the commit replaces
+    * exactly the hit files. CDC: new rows image as updates of the stored
+    * rows of their keys, or as inserts; without new rows the `doomed`
+    * stored rows image as deletes. (applyChangelog's fused path, the one
+    * caller with both new rows and deleted keys, runs only on tables
+    * without a changelog.) `newRows` carries its row count, which sizes the
+    * output. No hits and no new rows commit a no-op. */
+  private def rewriteCommit(instant: String, op: String, live: Seq[FileMeta],
+      hitFiles: Seq[FileMeta], carry: DataFrame => DataFrame,
+      doomed: DataFrame => DataFrame, newRows: Option[(DataFrame, Long)],
+      commitMeta: Map[String, String]): Unit =
+    if (hitFiles.isEmpty && newRows.isEmpty)
+      commitValidated(Commit(instant, op, Nil, Nil, commitMeta))
+    else {
+      val affected = if (hitFiles.isEmpty) None else Some(readFiles(hitFiles).cache())
+      try {
+        val carried = affected.map(a => project(carry(a), presentCols(a)))
+        val fresh = newRows.map { case (rows, _) =>
+          val withCols = withMeta(rows, instant)
+          project(withCols, presentCols(withCols))
         }
-        // cached: reused by the rewrite union and both CDC image branches
-        (hit, if (hit.isEmpty) None else Some(readFiles(hit).cache()))
-      }
-
-    val newRows = withMeta(batch, instant)
-    val cols = userCols(newRows) ++ GraftMeta.cols
-    try {
-    val out = affected match {
-      case Some(aff) =>
-        // anti-joins are duplicate-insensitive and the batch is
-        // precombined (key-unique): no distinct exchange needed
-        val carried = aff.join(batch.select(keyCol), Seq(cfg.keyField), "leftanti")
-          .drop(cfg.keyGen.syntheticCols: _*)
         // allowMissingColumns = schema evolution: a batch may ADD columns;
         // carried rows get nulls for them (and vice versa for columns the
         // batch omits). Parquet handles per-file schema differences at read.
-        carried.unionByName(newRows.selectExpr(cols.map(c => s"`$c`"): _*),
-          allowMissingColumns = true)
-      case None => newRows.selectExpr(cols.map(c => s"`$c`"): _*)
+        val out = (carried ++ fresh).reduce(_.unionByName(_, allowMissingColumns = true))
+        // sized like the files it replaces: carried rows stay ≈ hit rows
+        // minus the replaced ones, new rows add their share
+        val nOut = rewriteFileCount(live, hitFiles.map(_.rows).sum + newRows.fold(0L)(_._2))
+        val adds =
+          if (newRows.isEmpty && out.isEmpty) Nil // every stored row of the hits deleted
+          else writeFiles(out, instant, numFiles = nOut, sortCols = rewriteSortCols)
+        writeCdc(newRows match {
+          case Some((rows, _)) => upsertImages(affected, rows)
+          case None =>
+            val aff = affected.get
+            project(doomed(aff), userCols(aff)).withColumn("_change_type", lit("delete"))
+        }, instant)
+        commitValidated(Commit(instant, op, adds, hitFiles.map(_.path), commitMeta))
+      } finally affected.foreach(_.unpersist())
     }
-    // size the rewrite like the files it replaces: carried rows stay ≈ hit
-    // rows minus replaced, batch rows add their share
-    val nOut = rewriteFileCount(live, hitFiles.map(_.rows).sum + batchRows)
-    val adds = writeFiles(out, instant, numFiles = nOut, sortCols = rewriteSortCols)
 
-    if (cfg.writeChangelog) {
-      val uc = userCols(newRows)
-      affected match {
-        case Some(aff) =>
-          // ONE full-outer join yields all three image kinds in a single
-          // pass (matched → pre+post, batch-only → insert, stored-only →
-          // carried, no image). Sides are null-padded per column so a
-          // schema-evolving batch (new columns the stored files lack, or
-          // vice versa) images cleanly.
-          def projStruct(df: DataFrame) = {
-            val have = df.columns.toSet
-            struct(uc.map(c =>
-              (if (have(c)) col(c)
-               else lit(null).cast(newRows.schema(c).dataType)).as(c)): _*)
-          }
-          val oldSide = aff.select(keyCol.as("_gk"), projStruct(aff).as("_old"))
-          val newSide = batch.select(keyCol.as("_gk"), projStruct(batch).as("_new"))
-          val images = oldSide.join(newSide, Seq("_gk"), "full_outer")
-            .filter(col("_new").isNotNull) // stored-only rows: carried, no image
-            .select(explode(
-              when(col("_old").isNotNull,
-                array(struct(col("_old").as("row"), lit("update_preimage").as("_ct")),
-                  struct(col("_new").as("row"), lit("update_postimage").as("_ct"))))
-                .otherwise(array(struct(col("_new").as("row"), lit("insert").as("_ct")))))
-              .as("e"))
-            .select(col("e.row.*"), col("e._ct").as("_change_type"))
-          writeCdc(images, instant)
-        case None =>
-          writeCdc(batch.selectExpr(uc.map(c => s"`$c`"): _*)
-            .withColumn("_change_type", lit("insert")), instant)
-      }
+  /** CDC images of `rows` landing over the stored `affected` rows: ONE
+    * full-outer join yields all three kinds in a single pass (matched →
+    * pre+post, batch-only → insert, stored-only → carried, no image). Sides
+    * are null-padded per column so a schema-evolving batch (new columns the
+    * stored files lack, or vice versa) images cleanly. */
+  private def upsertImages(affected: Option[DataFrame], rows: DataFrame): DataFrame = {
+    val uc = userCols(rows)
+    affected match {
+      case Some(aff) =>
+        def projStruct(df: DataFrame) = {
+          val have = df.columns.toSet
+          struct(uc.map(c =>
+            (if (have(c)) col(c) else lit(null).cast(rows.schema(c).dataType)).as(c)): _*)
+        }
+        val oldSide = aff.select(keyCol.as("_gk"), projStruct(aff).as("_old"))
+        val newSide = rows.select(keyCol.as("_gk"), projStruct(rows).as("_new"))
+        oldSide.join(newSide, Seq("_gk"), "full_outer")
+          .filter(col("_new").isNotNull) // stored-only rows: carried, no image
+          .select(explode(
+            when(col("_old").isNotNull,
+              array(struct(col("_old").as("row"), lit("update_preimage").as("_ct")),
+                struct(col("_new").as("row"), lit("update_postimage").as("_ct"))))
+              .otherwise(array(struct(col("_new").as("row"), lit("insert").as("_ct")))))
+            .as("e"))
+          .select(col("e.row.*"), col("e._ct").as("_change_type"))
+      case None => project(rows, uc).withColumn("_change_type", lit("insert"))
     }
-    commitValidated(Commit(instant, op, adds, hitFiles.map(_.path), commitMeta))
-    } finally affected.foreach(_.unpersist())
   }
 
   /** DELETE by predicate (quickstart.sql:71-74): COW rewrites only files
@@ -1760,35 +1795,14 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
       appendDelta(doomed, deleted = true)
     } else withReservedInstant { instant =>
       val live = timeline.liveFiles(None)
-      val snap = readFiles(live)
-      val hits = snap.filter(predicate)
+      val hits = readFiles(live).filter(predicate)
         .select(col("_metadata.file_path").as("f")).distinct()
         .collect().map(r => relPath(r.getString(0))).toSet
-      val hitFiles = live.filter(f => hits.contains(f.path))
-      if (hitFiles.isEmpty) {
-        commitValidated(Commit(instant, "delete", Nil, Nil))
-      } else {
-        // cached: the kept-rows rewrite and the CDC delete images both scan
-        // the same hit files
-        val affected = readFiles(hitFiles).cache()
-        try {
-          // NULL predicate results must KEEP the row (SQL DELETE semantics) —
-          // filter(!predicate) would silently drop them
-          val kept = affected.filter(!coalesce(predicate, lit(false)))
-          val cols = presentCols(affected)
-          val adds =
-            if (kept.isEmpty) Nil
-            else writeFiles(kept.selectExpr(cols.map(c => s"`$c`"): _*), instant,
-              numFiles = rewriteFileCount(live, hitFiles.map(_.rows).sum),
-              sortCols = rewriteSortCols)
-          writeCdc(
-            affected.filter(coalesce(predicate, lit(false)))
-              .selectExpr(userCols(affected).map(c => s"`$c`"): _*)
-              .withColumn("_change_type", lit("delete")),
-            instant)
-          commitValidated(Commit(instant, "delete", adds, hitFiles.map(_.path)))
-        } finally affected.unpersist()
-      }
+      // NULL predicate results must KEEP the row (SQL DELETE semantics) —
+      // filter(!predicate) would silently drop them
+      val matched = coalesce(predicate, lit(false))
+      rewriteCommit(instant, "delete", live, live.filter(f => hits.contains(f.path)),
+        carry = _.filter(!matched), doomed = _.filter(matched), None, Map.empty)
       instant
     }
   }
@@ -1801,57 +1815,9 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
   def deleteByKeys(keys: DataFrame): String = {
     ensureConfig()
     val keyDf = keys.select(keyCol).distinct()
-    if (cfg.tableType == TableType.Mor) {
-      val doomed = read().join(keyDf, Seq(cfg.keyField), "leftsemi")
-      return appendDelta(doomed, deleted = true)
-    }
-    withReservedInstant { instant =>
-      val live = timeline.liveFiles(None)
-      val kdf = keyDf.cache()
-      try {
-        val rangeRow = kdf.agg(
-          min(keyStr(keyCol, kdf)).as("mn"), max(keyStr(keyCol, kdf)).as("mx")).head()
-        if (rangeRow.isNullAt(0) || live.isEmpty) {
-          commitValidated(Commit(instant, "delete", Nil, Nil))
-          instant
-        } else {
-          val (bMin, bMax) = (rangeRow.getString(0), rangeRow.getString(1))
-          val cand = live.filter(f => f.minKey <= bMax && bMin <= f.maxKey)
-          // index-served tagging with the classic probe as the fallback
-          // tier, same contract as upsert's candidate probe
-          val hitFiles =
-            if (cand.isEmpty) Seq.empty[FileMeta]
-            else graft.sources.FsCalls.withPhase("candidate_probe") {
-              rliTagHits(kdf, cand) match {
-                case Some((idxHits, unmapped)) =>
-                  idxHits ++ probeCandidates(kdf, unmapped)
-                case None => probeCandidates(kdf, cand)
-              }
-            }
-          if (hitFiles.isEmpty) {
-            commitValidated(Commit(instant, "delete", Nil, Nil))
-          } else {
-            val affected = readFiles(hitFiles).cache()
-            try {
-              val kept = affected.join(kdf, Seq(cfg.keyField), "leftanti")
-              val cols = presentCols(affected)
-              val adds =
-                if (kept.isEmpty) Nil
-                else writeFiles(kept.selectExpr(cols.map(c => s"`$c`"): _*), instant,
-                  numFiles = rewriteFileCount(live, hitFiles.map(_.rows).sum),
-                  sortCols = rewriteSortCols)
-              writeCdc(
-                affected.join(kdf, Seq(cfg.keyField), "leftsemi")
-                  .selectExpr(userCols(affected).map(c => s"`$c`"): _*)
-                  .withColumn("_change_type", lit("delete")),
-                instant)
-              commitValidated(Commit(instant, "delete", adds, hitFiles.map(_.path)))
-            } finally affected.unpersist()
-          }
-          instant
-        }
-      } finally kdf.unpersist()
-    }
+    if (cfg.tableType == TableType.Mor)
+      appendDelta(read().join(keyDf, Seq(cfg.keyField), "leftsemi"), deleted = true)
+    else keyedCommit("delete", keyDf, None)
   }
 
   /** Apply a RowKind-tagged changelog batch — the Spark-native analogue of
@@ -1868,57 +1834,22 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     // last action per key; ties on seq broken deterministically by kind
     val w = Window.partitionBy(cfg.keyField).orderBy(col(seqCol).desc, kind.asc)
     val last = active.withColumn("_graft_cl_rn", row_number().over(w))
-      .filter(col("_graft_cl_rn") === 1).drop("_graft_cl_rn").cache()
-    try {
-      val isDelete = upper(col(rowKindCol)).isin("D", "-D")
-      val upserts = last.filter(!isDelete).drop(rowKindCol)
-      // MOR and CDC-imaged tables compose the two keyed primitives (delete
-      // tombstones / CDC images need the split); plain COW fuses everything
-      // into ONE rewrite commit: candidate files are pruned by the range of
-      // ALL changed keys, carried rows exclude every changed key (so
-      // deleted keys vanish and updated keys are replaced), and the upsert
-      // rows land — one candidate scan, one write, one atomic commit.
-      if (cfg.tableType == TableType.Mor || cfg.writeChangelog) {
+      .filter(col("_graft_cl_rn") === 1).drop("_graft_cl_rn")
+    val isDelete = kind.isin("D", "-D")
+    val upserts = last.filter(!isDelete).drop(rowKindCol)
+    // MOR and CDC-imaged tables compose the two keyed primitives (delete
+    // tombstones / CDC images need the split); plain COW fuses everything
+    // into ONE keyed commit: carried rows exclude every changed key (so
+    // deleted keys vanish and updated keys are replaced), and the upsert
+    // rows land — one candidate probe, one write, one atomic commit.
+    if (cfg.tableType == TableType.Mor || cfg.writeChangelog) {
+      last.cache()
+      try {
         deleteByKeys(last.filter(isDelete).select(keyCol))
-        return upsert(upserts)
-      }
-      if (timeline.liveFiles(None).isEmpty) return insert(upserts)
-      withReservedInstant { instant =>
-        val live = timeline.liveFiles(None)
-        val rangeRow = last.agg(
-          min(keyStr(keyCol, last)).as("mn"), max(keyStr(keyCol, last)).as("mx"),
-          count(lit(1)).as("cnt")).head()
-        if (rangeRow.isNullAt(0)) {
-          commitValidated(Commit(instant, "changelog", Nil, Nil))
-        } else {
-          val (bMin, bMax) = (rangeRow.getString(0), rangeRow.getString(1))
-          val cand = live.filter(f => f.minKey <= bMax && bMin <= f.maxKey)
-          // `last` is already one row per key (the row_number window):
-          // the semi/anti joins below need no distinct exchange
-          val allKeys = last.select(keyCol)
-          val hits =
-            if (cand.isEmpty) Set.empty[String]
-            else readFiles(cand).withColumn("_graft_file", col("_metadata.file_path"))
-              .join(allKeys, Seq(cfg.keyField), "leftsemi")
-              .select(col("_graft_file")).distinct()
-              .collect().map(r => relPath(r.getString(0))).toSet
-          val hitFiles = cand.filter(f => hits.contains(f.path))
-          val newRows = withMeta(upserts, instant)
-          val cols = userCols(newRows) ++ GraftMeta.cols
-          val out =
-            if (hitFiles.isEmpty) newRows.selectExpr(cols.map(c => s"`$c`"): _*)
-            else readFiles(hitFiles)
-              .join(allKeys, Seq(cfg.keyField), "leftanti")
-              .drop(cfg.keyGen.syntheticCols: _*)
-              .unionByName(newRows.selectExpr(cols.map(c => s"`$c`"): _*),
-                allowMissingColumns = true)
-          val nOut = rewriteFileCount(live, hitFiles.map(_.rows).sum + rangeRow.getLong(2))
-          val adds = writeFiles(out, instant, numFiles = nOut, sortCols = rewriteSortCols)
-          commitValidated(Commit(instant, "changelog", adds, hitFiles.map(_.path)))
-        }
-        instant
-      }
-    } finally last.unpersist()
+        upsert(upserts)
+      } finally last.unpersist()
+    } else if (timeline.liveFiles(None).isEmpty) insert(upserts)
+    else keyedCommit("changelog", last, Some(upserts))
   }
 
   /** MERGE INTO (quickstart.sql:59-66): WHEN MATCHED THEN UPDATE SET * /
@@ -1972,34 +1903,41 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
 
   // ------------------------------------------------------------- services
 
+  /** The one file-set rewrite, behind compact, cluster, clusterZOrder,
+    * rebucket and splitBucket. Under an instant reserved by `via` (the
+    * handle whose bucket layout the output takes), the `pick`ed live files
+    * are resolved (MOR deltas and tombstones fold into the rewritten base;
+    * winning rows keep their original commit times, so incremental reads
+    * survive), projected to their present columns and written by `write`
+    * (given the picked files and the instant); the commit replaces exactly
+    * the picked files. Every `op` here is a layout op: content is
+    * unchanged, so validators skip it. */
+  private def rewriteFileSet(op: String, via: GraftTable = this,
+      pick: Seq[FileMeta] => Seq[FileMeta] = identity)(
+      write: (DataFrame, Seq[FileMeta], String) => Seq[FileMeta]): String =
+    via.withReservedInstant { instant =>
+      val files = pick(timeline.liveFiles(None))
+      val snap = resolve(readFiles(files))
+      val adds = write(project(snap, presentCols(snap)), files, instant)
+      via.commitValidated(Commit(instant, op, adds, files.map(_.path)))
+      instant
+    }
+
   /** Bin-pack small files into ~`targetRows`-sized files (the analogue of
     * Hudi inline compaction / small-file handling,
     * DeltaStreamerExample.scala:49-56). Data content is unchanged. */
-  def compact(targetRows: Long): String = withReservedInstant { instant =>
-    val live = timeline.liveFiles(None)
-    val totalRows = live.map(_.rows).sum
-    val nFiles = math.max(1, math.ceil(totalRows.toDouble / targetRows).toInt)
-    // resolve() folds MOR deltas/tombstones into the rewritten base; winning
-    // rows keep their original commit times, so incremental reads survive
-    val snap = resolve(readFiles(live))
-    val cols = presentCols(snap)
-    val adds = writeFiles(snap.selectExpr(cols.map(c => s"`$c`"): _*), instant, nFiles)
-    commitValidated(Commit(instant, "compact", adds, live.map(_.path)))
-    instant
+  def compact(targetRows: Long): String = rewriteFileSet("compact") { (snap, live, instant) =>
+    val nFiles = math.max(1, math.ceil(live.map(_.rows).sum.toDouble / targetRows).toInt)
+    writeFiles(snap, instant, nFiles)
   }
 
   /** Rewrite the table range-clustered on `sortCols` (the analogue of Hudi
     * clustering, flink consistent_hashing.sql:93-97): co-locates rows for
     * downstream range/point pruning. Content is unchanged. */
-  def cluster(sortCols: Seq[String], numFiles: Int): String = withReservedInstant { instant =>
-    val live = timeline.liveFiles(None)
-    val snap = resolve(readFiles(live))
-    val cols = presentCols(snap)
-    val adds = writeFiles(
-      snap.selectExpr(cols.map(c => s"`$c`"): _*), instant, numFiles, sortCols)
-    commitValidated(Commit(instant, "cluster", adds, live.map(_.path)))
-    instant
-  }
+  def cluster(sortCols: Seq[String], numFiles: Int): String =
+    rewriteFileSet("cluster") { (snap, _, instant) =>
+      writeFiles(snap, instant, numFiles, sortCols)
+    }
 
   /** Z-order clustering on N >= 2 numeric columns (the multidimensional
     * variant of `cluster`, like Hudi's z-order layout optimization): rows
@@ -2012,10 +1950,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     val pinMax = spark.conf.getOption(GraftTable.ZOrderPinMaxKey).map(v => v.trim.toLongOption.getOrElse(
       throw new IllegalArgumentException(s"${GraftTable.ZOrderPinMaxKey} must be a byte count, got '$v'")))
       .getOrElse(4L << 30)
-    withReservedInstant { instant =>
-      val live = timeline.liveFiles(None)
-      val snap = resolve(readFiles(live))
-      val cols = presentCols(snap)
+    rewriteFileSet("cluster") { (snap, live, instant) =>
       // one job computes every dimension's min/max
       val r = snap.agg(
         sortCols.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double")))).head,
@@ -2025,8 +1960,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
           s"clusterZOrder($c) requires non-null numeric values in every column")
         (col(c), r.getDouble(2 * i), r.getDouble(2 * i + 1))
       }
-      val z = graft.functions.ZOrder.zValueN(dims)
-      val zSnap = snap.selectExpr(cols.map(c => s"`$c`"): _*).withColumn("_graft_z", z)
+      val zSnap = snap.withColumn("_graft_z", graft.functions.ZOrder.zValueN(dims))
       // pin before the range repartition: the bound-sampling job would
       // otherwise re-scan the whole table and recompute every z-value.
       // SIZE-GATED: this is a WHOLE-TABLE rewrite, so the pin stores a full
@@ -2036,18 +1970,15 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
       // (conf `spark.graft.zorder.pinMaxBytes`, default 4 GiB of live file
       // length from commit metadata) the pin is skipped and the rewrite pays
       // the sampling re-scan — the bounded, scale-safe cost.
-      val liveBytes = live.map(_.len).sum
       val (zin, zrdd) =
-        if (liveBytes <= pinMax) graft.GraftSession.pinRows(zSnap)
+        if (live.map(_.len).sum <= pinMax) graft.GraftSession.pinRows(zSnap)
         else (zSnap, null)
       val out = zin
         .repartitionByRange(numFiles, col("_graft_z"))
         .sortWithinPartitions("_graft_z")
         .drop("_graft_z")
-      val adds = try writeFiles(out, instant)
-        finally if (zrdd != null) zrdd.unpersist(blocking = false)
-      commitValidated(Commit(instant, "cluster", adds, live.map(_.path)))
-      instant
+      try writeFiles(out, instant)
+      finally if (zrdd != null) zrdd.unpersist(blocking = false)
     }
   }
 
@@ -2068,16 +1999,10 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     require(newNumBuckets > 0, "newNumBuckets must be positive")
     val newCfg = cfg.copy(numBuckets = newNumBuckets)
     val h2 = new GraftTable(spark, newCfg)
-    val instant = h2.withReservedInstant { i =>
-      val live = timeline.liveFiles(None)
-      val snap = resolve(readFiles(live))
-      val cols = presentCols(snap)
-      // one shuffle partition per new bucket: writeFiles repartitions by the
-      // bucket column, so each bucket lands as one file written by one task
-      val adds = h2.writeFiles(
-        snap.selectExpr(cols.map(c => s"`$c`"): _*), i, numFiles = newNumBuckets)
-      h2.timeline.commit(Commit(i, "rebucket", adds, live.map(_.path)))
-      i
+    // one shuffle partition per new bucket: writeFiles repartitions by the
+    // bucket column, so each bucket lands as one file written by one task
+    val instant = rewriteFileSet("rebucket", via = h2) { (snap, _, i) =>
+      h2.writeFiles(snap, i, numFiles = newNumBuckets)
     }
     TableProperties.save(spark, newCfg)
     instant
@@ -2095,20 +2020,14 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     require(cfg.numBuckets > 0, s"table ${cfg.path} has no bucket index")
     require(b >= 0 && b < cfg.numBuckets, s"bucket $b out of range [0, ${cfg.numBuckets})")
     val h2 = new GraftTable(spark, cfg.copy(numBuckets = 2 * cfg.numBuckets))
-    h2.withReservedInstant { i =>
-      val victims = timeline.liveFiles(None)
-        .filter(f => f.bucket == b && f.bucketMod == cfg.numBuckets)
+    // every version of a key lives in the key's bucket, so resolving just
+    // this bucket's files is a complete per-key view
+    rewriteFileSet("split_bucket", via = h2, pick = { live =>
+      val victims = live.filter(f => f.bucket == b && f.bucketMod == cfg.numBuckets)
       require(victims.nonEmpty,
         s"bucket $b has no files under modulus ${cfg.numBuckets} (already split?)")
-      // every version of a key lives in the key's bucket, so resolving just
-      // this bucket's files is a complete per-key view
-      val snap = resolve(readFiles(victims))
-      val cols = presentCols(snap)
-      val adds = h2.writeFiles(
-        snap.selectExpr(cols.map(c => s"`$c`"): _*), i, numFiles = 2)
-      h2.timeline.commit(Commit(i, "split_bucket", adds, victims.map(_.path)))
-      i
-    }
+      victims
+    }) { (snap, _, i) => h2.writeFiles(snap, i, numFiles = 2) }
   }
 
   /** Flip the persisted bucket count to 2N once EVERY live bucketed file is
@@ -2367,7 +2286,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
       case (instant, reservedAt) =>
         reservedAt >= now - olderThanMs || !timeline.abortIfStale(instant, olderThanMs)
     }.keySet
-    val referenced = (timeline.archivedInstants() ++ timeline.instants()).distinct
+    val referenced = timeline.committedInstants()
       .flatMap(i => timeline.readCommit(i).adds.map(_.path)).toSet
     val cutoff = now - olderThanMs
     val it = fs.listFiles(dataDir, true)
@@ -2395,7 +2314,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     * Returns the number of files deleted. */
   def cleanRetainCommits(retain: Int): Int = {
     require(retain >= 1, "must retain at least the latest commit")
-    val all = (timeline.archivedInstants() ++ timeline.instants()).distinct.sorted
+    val all = timeline.committedInstants()
     if (all.size <= retain) 0
     else clean(all(all.size - retain))
   }
@@ -2405,7 +2324,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     * Hudi's CLI/metrics (DeltaStreamerExample.scala:57-58 hoodie.metrics). */
   def history(): DataFrame = {
     import spark.implicits._
-    (timeline.archivedInstants() ++ timeline.instants()).distinct.sorted
+    timeline.committedInstants()
       .map { i =>
         val c = timeline.readCommit(i)
         (c.instant, c.op, c.adds.size.toLong, c.removes.size.toLong,

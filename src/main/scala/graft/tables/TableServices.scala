@@ -143,7 +143,7 @@ object TableServices {
       table: GraftTable, instantCutoff: String): Seq[String] = {
     val tl = table.timeline
     val lastTouched = scala.collection.mutable.Map.empty[String, String]
-    (tl.archivedInstants() ++ tl.instants()).distinct.sorted.foreach { i =>
+    tl.committedInstants().foreach { i =>
       tl.readCommit(i).adds.foreach { f =>
         if (f.partition.nonEmpty) lastTouched(f.partition) = i
       }

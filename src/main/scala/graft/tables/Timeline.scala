@@ -659,8 +659,10 @@ final class Timeline(fs: FileSystem, tableDir: Path) {
     * candidates for `clean`. Consults archived commits too, so archiving
     * before cleaning never strands replaced files on disk. */
   def removedFiles(asOf: String): Seq[String] =
-    (archivedInstants() ++ instants()).filter(_ <= asOf).distinct
-      .flatMap(i => readCommit(i).removes)
+    committedInstants().filter(_ <= asOf).flatMap(i => readCommit(i).removes)
+
+  /** Every committed instant, archived or hot, distinct and sorted. */
+  def committedInstants(): Seq[String] = (archivedInstants() ++ instants()).distinct.sorted
 
   /** Instants whose commit files were moved to `_graft/archive/`. */
   def archivedInstants(): Seq[String] = {

@@ -303,4 +303,52 @@ class FsCallSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.read().count() == 20000L)
     assert(t.read().filter(col("v") === 1.5).count() == nKeys)
   }
+
+  test("bucket pruning: keyed delete and changelog probes ride the batch's bucket") {
+    // 8 buckets, no record index: three inserts of interleaved ids leave
+    // one whole-key-range file per bucket each, so a batch inside ONE
+    // bucket that spans the key range keeps every file as a range
+    // candidate — only bucket pruning narrows the probe to that bucket
+    val root = "/tmp/graft_spec/fscall_bucketprobe"
+    val t = GraftTable(spark, GraftTableConfig(root, "id", "id", numBuckets = 8))
+    t.dropIfExists()
+    val base = spark.range(20000L).selectExpr("id", "id % 50 AS grp",
+      "cast(id AS double) AS v")
+    (0 until 3).foreach(j => t.insert(base.filter(col("id") % 3 === j), numFiles = 8))
+    assert(t.timeline.liveFiles(None).groupBy(_.bucket).values.forall(_.size == 3))
+    val b = 3
+    val inBucket = base.filter(pmod(xxhash64(col("id")), lit(8)) === b)
+    def bucketFiles = t.timeline.liveFiles(None).count(_.bucket == b)
+    def probeOpens(body: => Unit): Long = {
+      FsCalls.enablePhases()
+      try calls(body)._1.getOrElse("p:candidate_probe/open", 0L)
+      finally FsCalls.disablePhases()
+    }
+
+    // int keys against the long key column: pruning must bucket the key
+    // as stored, or the delete misses the file that holds it
+    val doomed = inBucket.filter(col("id") % 97 === 0).select(col("id").cast("int").as("id"))
+    val nDoomed = doomed.count()
+    val filesBefore = bucketFiles
+    val delOpens = probeOpens(t.deleteByKeys(doomed))
+    println(s"[fscall] bucketed deleteByKeys: $delOpens probe opens, $filesBefore bucket files")
+    assert(delOpens > 0 && delOpens <= filesBefore,
+      s"deleteByKeys probe opened $delOpens files; bucket $b holds $filesBefore")
+    assert(t.read().count() == 20000L - nDoomed)
+
+    val changes = inBucket.filter(col("id") % 89 === 0)
+      .withColumn("op", when(col("id") % 2 === 0, "+U").otherwise("-D"))
+      .withColumn("v", lit(-1.0))
+    val nUp = changes.filter(col("op") === "+U").count()
+    val nKept = base.join(doomed, Seq("id"), "left_anti")
+      .join(changes.select("id"), Seq("id"), "left_anti").count()
+    val filesBefore2 = bucketFiles
+    val clOpens = probeOpens(t.applyChangelog(changes, "op", "id"))
+    println(s"[fscall] bucketed applyChangelog: $clOpens probe opens, $filesBefore2 bucket files")
+    assert(clOpens > 0 && clOpens <= filesBefore2,
+      s"applyChangelog probe opened $clOpens files; bucket $b holds $filesBefore2")
+    assert(t.read().count() == nKept + nUp)
+    assert(t.read().filter(col("v") === -1.0).count() == nUp)
+    t.dropIfExists()
+  }
 }

@@ -15,6 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    its own), which holds because upsert precombines and deleteByKeys
   *    dedups before tagging; a duplicate leaking through would show up
   *    here as doubled rows or images;
+  *  - duplicate-keyed RowKind changelogs through `applyChangelog`, on the
+  *    fused one-commit path of that table (which rides the same tagging)
+  *    and on a changelog table, which splits them into a keyed delete and
+  *    an upsert;
   *  - a malformed `spark.graft.zorder.pinMaxBytes` fails the z-order
   *    rewrite with the key named, before the table is touched. */
 class KeyedWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -87,6 +91,65 @@ class KeyedWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(t.cdc(i1, i2), Cols :+ "_change_type") ==
       rows(deleteImages, Cols :+ "_change_type"))
     t.dropIfExists()
+  }
+
+  test("duplicate-keyed applyChangelog, fused and composed, matches a DataFrame model") {
+    import spark.implicits._
+    // two or three actions per key, across the whole key range and past
+    // its end: the later ts wins, a ts tie goes to the kind that sorts
+    // first (+I, then +U, then -D), and -U rows are ignored even when later
+    val keys = (0L until BaseRows by 53L) ++ Seq(BaseRows + 2, BaseRows + 5)
+    val changes = keys.zipWithIndex.flatMap { case (k, i) =>
+      def row(op: String, ts: Long, tag: Double) = (op, k, k % 10, k * 10 + tag, ts)
+      i % 5 match {
+        case 0 => Seq(row("+I", 1L, 0.1), row("+U", 2L, 0.2))
+        case 1 => Seq(row("+U", 1L, 0.1), row("-D", 2L, 0.2))
+        case 2 => Seq(row("-D", 2L, 0.1), row("+U", 2L, 0.2))
+        case 3 => Seq(row("-D", 1L, 0.1), row("+U", 2L, 0.2), row("-U", 3L, 0.3))
+        case _ => Seq(row("+U", 2L, 0.1), row("+I", 2L, 0.2), row("-D", 2L, 0.3))
+      }
+    }.toDF(("op" +: Cols): _*)
+
+    // model: `latest` over a ts that folds the kind order in as a tie-break
+    val kindRank = when(col("op") === "+I", 2).when(col("op") === "+U", 1).otherwise(0)
+    val won = latest(changes.filter(col("op") =!= "-U")
+        .withColumnRenamed("ts", "ts0").withColumn("ts", col("ts0") * 3 + kindRank))
+      .drop("ts").withColumnRenamed("ts0", "ts")
+    val deleted = won.filter(col("op") === "-D").select("id")
+    val upserted = won.filter(col("op") =!= "-D").select(Cols.map(col): _*)
+    val model = base.join(won.select("id"), Seq("id"), "left_anti").unionByName(upserted)
+    val images = base.join(deleted, Seq("id"), "left_semi")
+      .withColumn("_change_type", lit("delete"))
+      .unionByName(base.join(upserted.select("id"), Seq("id"), "left_semi")
+        .withColumn("_change_type", lit("update_preimage")))
+      .unionByName(upserted.join(base.select("id"), Seq("id"), "left_semi")
+        .withColumn("_change_type", lit("update_postimage")))
+      .unionByName(upserted.join(base.select("id"), Seq("id"), "left_anti")
+        .withColumn("_change_type", lit("insert")))
+
+    // a plain COW table takes the fused one-commit path; a changelog table
+    // composes deleteByKeys + upsert so each commit writes its images
+    Seq(false -> Seq("changelog"), true -> Seq("delete", "upsert")).foreach {
+      case (cdcOn, ops) =>
+        val root = s"/tmp/graft_spec/keyedwrite_changelog_$cdcOn"
+        val t = GraftTable(spark, GraftTableConfig(root, "id", "ts",
+          writeChangelog = cdcOn, recordIndexBuckets = 4))
+        t.dropIfExists()
+        t.insert(base, numFiles = 16)
+        val live = t.timeline.liveFiles(None)
+        val (lo, hi) = (f"${keys.min}%020d", f"${keys.max}%020d")
+        assert(live.count(f => f.minKey <= hi && lo <= f.maxKey) >= 8,
+          "the batch must leave at least 8 candidate files for index tagging")
+        val i0 = t.timeline.latestInstant().get
+        val i1 = t.applyChangelog(changes, "op", "ts")
+        assert(t.timeline.instants().filter(_ > i0).map(t.timeline.readCommit(_).op) == ops)
+        assert(rows(t.read()) == rows(model))
+        assert(rows(t.pointLookup(keys)) == rows(model.filter(col("id").isin(keys: _*))))
+        if (cdcOn)
+          assert(rows(t.cdc(i0, i1), Cols :+ "_change_type") ==
+            rows(images, Cols :+ "_change_type"))
+        t.dropIfExists()
+    }
   }
 
   test("a malformed zorder.pinMaxBytes names the key and leaves the table untouched") {
