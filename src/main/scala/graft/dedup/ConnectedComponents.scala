@@ -73,7 +73,9 @@ object ConnectedComponents {
   def run(edgesIn: DataFrame): DataFrame = runCounted(edgesIn)._1
 
   /** [[run]] for inputs the caller GUARANTEES carry no self-loop rows
-    * (a != b everywhere — e.g. a strict a < b pair list). Labels are then
+    * (a != b everywhere — e.g. a strict a < b pair list); a self-loop row
+    * fails the first job instead of silently losing its vertex's label
+    * (`run` labels such a vertex by itself). Labels are then
     * derived purely from the converged star forest, so the result frame
     * never re-references `edgesIn`: without this, the final labels query
     * re-ran the caller's whole edge-building lineage (shingle join +
@@ -101,10 +103,17 @@ object ConnectedComponents {
     // round's blocks (Dataset.unpersist on a localCheckpoint'd frame is a
     // CacheManager no-op; the blocks lingered until a GC cycle, measured
     // as run-over-run growth in back-to-back CC runs in one JVM)
-    var (edges, edgesRdd) = graft.GraftSession.pinRows(edgesIn
-      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct())
+    val typed = edgesIn.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+    val loopFree =
+      if (!selfLoopFree) typed.filter(col("a") =!= col("b"))
+      // the caller's guarantee is checked in the projection the first
+      // round's pin job evaluates anyway (no extra job). Not in a filter:
+      // the optimizer would push it into the caller's plan, below the
+      // caller's own a < b filter.
+      else typed.filter(col("a").isNotNull && col("b").isNotNull).select(
+        when(col("a") === col("b"), raise_error(lit("runNoSelfLoops: self-loop edge in input")))
+          .otherwise(col("a")).as("a"), col("b"))
+    var (edges, edgesRdd) = graft.GraftSession.pinRows(loopFree.distinct())
     var rounds = 0
     // the star forest: empty edge sets (including self-loop-only inputs)
     // skip the fixpoint — every vertex is its own component and the

@@ -294,10 +294,7 @@ final class GraftV2Table(
     asOf.map(table.readAsOf).getOrElse(table.read())
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    // latest-snapshot scans carry the table handle so pushed filters can
-    // prune the file set from timeline metadata (file pruning is defined
-    // against the CURRENT snapshot, so time-travel scans skip it)
-    new GraftScanBuilder(snapshot(), if (asOf.isEmpty) Some(table) else None)
+    new GraftScanBuilder(snapshot())
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(asOf.isEmpty, s"cannot write to a time-travel snapshot of ${name()}")
@@ -315,13 +312,12 @@ final class GraftV2Table(
   }
 }
 
-/** Scan with column pruning + filters applied INSIDE the snapshot plan (so
-  * Catalyst pushes them into the parquet scans); for latest-snapshot scans
-  * the filters additionally prune the FILE SET via timeline metadata
-  * (partition paths, key ranges + bucket/bloom, column stats — see
-  * [[GraftTable.prunedLiveFiles]]). Every filter is also reported back for
-  * Spark to re-apply above, which is harmless. */
-final class GraftScanBuilder(df0: DataFrame, table: Option[GraftTable] = None)
+/** Scan with column pruning + filters applied INSIDE the snapshot plan, so
+  * Catalyst pushes them into its scans: the metadata FileIndex skips files
+  * by them (partition paths, key ranges + bucket/bloom, column stats) and
+  * parquet skips row groups, time-travel snapshots included. Every filter
+  * is also reported back for Spark to re-apply above, which is harmless. */
+final class GraftScanBuilder(df0: DataFrame)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
@@ -329,10 +325,6 @@ final class GraftScanBuilder(df0: DataFrame, table: Option[GraftTable] = None)
   private var pushed = Array.empty[Filter]
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    table.foreach { t =>
-      val bounds = FilterToColumn.bounds(filters)
-      if (bounds.nonEmpty) df = t.readPruned(bounds)
-    }
     val translated = filters.flatMap(f => FilterToColumn.translate(f).map(f -> _))
     pushed = translated.map(_._1)
     translated.foreach { case (_, c) => df = df.filter(c) }

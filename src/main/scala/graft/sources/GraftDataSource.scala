@@ -29,8 +29,9 @@ import org.apache.spark.sql.types.StructType
   *   - `asOf` → time-travel snapshot at that instant
   *   - `begin` [+ `end`] → incremental read (latest state of rows changed)
   *   - `cdc=true` + `begin` [+ `end`] → change images with `_change_type`
-  * Filters are re-applied inside the relation's plan, so parquet pushdown
-  * and partition pruning still engage under `format("graft")` reads.
+  * Filters are re-applied inside the relation's plan, so the scan's
+  * metadata FileIndex skips files and parquet pushdown still engages
+  * under `format("graft")` reads, time travel included.
   */
 class GraftDataSource
     extends RelationProvider
@@ -150,18 +151,16 @@ class GraftDataSource
         table.timeline.instantAsOfTime(ms.toLong).getOrElse(
           throw new IllegalArgumentException(
             s"no commit at or before epoch ms $ms at $path"))))
+    // a fixed-range read is planned once; the snapshot plan at each scan
+    def fixed(d: DataFrame) = GraftRelation(sqlContext, d)
     (asOf, parameters.get("begin"),
         parameters.getOrElse("cdc", "false").toBoolean) match {
-      case (Some(instant), _, _) => GraftRelation(sqlContext, table.readAsOf(instant))
+      case (Some(instant), _, _) => fixed(table.readAsOf(instant))
       case (_, Some(begin), false) =>
-        GraftRelation(sqlContext,
-          table.incremental(begin, parameters.getOrElse("end", graft.tables.Timeline.MaxInstant)))
+        fixed(table.incremental(begin, parameters.getOrElse("end", graft.tables.Timeline.MaxInstant)))
       case (_, Some(begin), true) =>
-        GraftRelation(sqlContext,
-          table.cdc(begin, parameters.getOrElse("end", graft.tables.Timeline.MaxInstant)))
-      // snapshot reads carry the table handle so pushed filters can prune
-      // the FILE SET from timeline metadata, not just parquet row groups
-      case _ => GraftRelation(sqlContext, table.read(), Some(table))
+        fixed(table.cdc(begin, parameters.getOrElse("end", graft.tables.Timeline.MaxInstant)))
+      case _ => GraftRelation(sqlContext, table.read())
     }
   }
 
@@ -198,13 +197,6 @@ class GraftDataSource
   }
 }
 
-/** Relation backed by the table's snapshot plan. Pushed filters engage at
-  * two levels: for snapshot reads (`table` present) they first prune the
-  * FILE SET via timeline metadata (partition paths, key ranges + bucket
-  * index + bloom filters, per-file column stats — the Hudi data-skipping
-  * index re-expressed); then they are applied INSIDE the plan so Catalyst
-  * drives them into the remaining parquet scans. Spark re-applies them
-  * above as well, which is harmless. */
 object GraftDataSource {
 
   private def keyGenOf(parameters: Map[String, String]): KeyGen =
@@ -248,11 +240,18 @@ object GraftDataSource {
   }
 }
 
-final case class GraftRelation(
-    sqlContext: SQLContext, df: DataFrame, table: Option[GraftTable] = None)
+/** Relation backed by the table's snapshot plan. Pushed filters are
+  * applied INSIDE the plan, so Catalyst drives them into its scans: the
+  * metadata FileIndex skips files by them (partition paths, key ranges +
+  * bucket index + bloom filters, per-file column stats — the Hudi
+  * data-skipping index re-expressed) and parquet skips row groups. Spark
+  * re-applies them above as well, which is harmless. `plan` is by-name
+  * and evaluated at each scan, so a snapshot relation the session catalog
+  * caches sees later commits. */
+final class GraftRelation(val sqlContext: SQLContext, plan: => DataFrame)
     extends BaseRelation with PrunedFilteredScan {
 
-  override def schema: StructType = df.schema
+  override lazy val schema: StructType = plan.schema
 
   /** The inner plan already produces InternalRows (codegen'd parquet scan
     * with pushed filters); declaring no-conversion hands them to the outer
@@ -260,14 +259,8 @@ final case class GraftRelation(
   override def needConversion: Boolean = false
 
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val base = table match {
-      case Some(t) =>
-        val bounds = FilterToColumn.bounds(filters)
-        if (bounds.isEmpty) df else t.readPruned(bounds)
-      case None => df
-    }
     val filtered = filters.flatMap(FilterToColumn.translate)
-      .foldLeft(base)((d, c) => d.filter(c))
+      .foldLeft(plan)((d, c) => d.filter(c))
     val projected =
       if (requiredColumns.isEmpty) filtered
       else filtered.select(requiredColumns.map(col).toSeq: _*)
@@ -276,24 +269,28 @@ final case class GraftRelation(
   }
 }
 
+object GraftRelation {
+  def apply(sqlContext: SQLContext, plan: => DataFrame): GraftRelation =
+    new GraftRelation(sqlContext, plan)
+}
+
 /** Translate Spark `sources.Filter`s back to Columns so pushdown survives
   * the DSv1 boundary. Untranslatable filters are skipped (Spark re-applies
   * every filter above the scan anyway). */
 object FilterToColumn {
 
-  /** Per-column [lo, hi] / equality-set bounds implied by the pushed filter
-    * conjuncts, for metadata file pruning. Only shapes that imply a sound
-    * bound contribute (Or/Not/IsNull contribute nothing — pruning must
-    * never drop a file a disjunct could match). Strict comparisons prune
-    * with their inclusive bound, which is conservative. */
-  def bounds(filters: Array[Filter]): Seq[ColBound] = filters.toSeq.flatMap(boundsOf)
+  /** Per-column [lo, hi] / equality-set bounds implied by the filter
+    * conjuncts a scan's FileIndex receives, for metadata file pruning. Only
+    * shapes that imply a sound bound contribute (Or/Not/IsNull contribute
+    * nothing — pruning must never drop a file a disjunct could match).
+    * Strict comparisons prune with their inclusive bound, which is
+    * conservative. */
+  def bounds(filters: Seq[Filter]): Seq[ColBound] = filters.flatMap(boundsOf)
 
   private def boundsOf(f: Filter): Seq[ColBound] = f match {
     case EqualTo(a, v) if v != null => Seq(ColBound(a, Some(v), Some(v), Some(Seq(v))))
     case EqualNullSafe(a, v) if v != null => Seq(ColBound(a, Some(v), Some(v), Some(Seq(v))))
-    case In(a, vs) if vs.nonEmpty && !vs.contains(null) =>
-      val (lo, hi) = minMaxOf(vs.toSeq)
-      Seq(ColBound(a, lo, hi, Some(vs.toSeq)))
+    case In(a, vs) if vs.nonEmpty && !vs.contains(null) => Seq(ColBound(a, inSet = Some(vs.toSeq)))
     case GreaterThan(a, v) if v != null => Seq(ColBound(a, lo = Some(v)))
     case GreaterThanOrEqual(a, v) if v != null => Seq(ColBound(a, lo = Some(v)))
     case LessThan(a, v) if v != null => Seq(ColBound(a, hi = Some(v)))
@@ -301,15 +298,6 @@ object FilterToColumn {
     case And(l, r) => boundsOf(l) ++ boundsOf(r)
     case _ => Nil
   }
-
-  private def minMaxOf(vs: Seq[Any]): (Option[Any], Option[Any]) =
-    if (vs.forall(_.isInstanceOf[Number])) {
-      val d = vs.map(v => v -> v.asInstanceOf[Number].doubleValue())
-      (Some(d.minBy(_._2)._1), Some(d.maxBy(_._2)._1))
-    } else if (vs.forall(_.isInstanceOf[String])) {
-      val s = vs.map(_.asInstanceOf[String])
-      (Some(s.min), Some(s.max))
-    } else (None, None)
 
   def translate(f: Filter): Option[Column] = f match {
     case EqualTo(a, v) => Some(col(a) === lit(v))

@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType, LongType,
+  ShortType, StringType, StructField, StructType}
 
 /** Names of the per-record metadata columns stored in every data file
   * (the graft analogues of Hudi's `_hoodie_commit_time` /
@@ -61,10 +62,10 @@ object TableType {
 }
 
 /** One conjunctive predicate bound on a column, for metadata file pruning
-  * ([[GraftTable.prunedLiveFiles]]): value in [lo, hi] (None = unbounded),
-  * optionally restricted to an equality set (EqualTo/In). A file must be
-  * compatible with EVERY bound to survive — callers still re-apply the full
-  * predicate on the rows. */
+  * (GraftTable.pruneFiles, behind every scan's MetaFileIndex): value in
+  * [lo, hi] (None = unbounded), and/or in an equality set (EqualTo/In). A
+  * file must be compatible with EVERY bound to survive — the scan still
+  * applies the full predicate to the rows. */
 final case class ColBound(
     col: String,
     lo: Option[Any] = None,
@@ -143,10 +144,13 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     * for humans and external tools), and `recursiveFileLookup` disables
     * Spark's partition inference — which would otherwise reject mixing
     * files from different commit-instant directories
-    * (CONFLICTING_DIRECTORY_STRUCTURES). Partition pruning is a timeline
-    * metadata operation here (see partitionFiles/readWhere), not directory
-    * inference. */
-  private[tables] def readFiles(files: Seq[FileMeta]): DataFrame = {
+    * (CONFLICTING_DIRECTORY_STRUCTURES). File skipping is a timeline
+    * metadata operation here: the scan's [[MetaFileIndex]] hands the
+    * filters Catalyst pushes into it to [[pruneFiles]] (the record index
+    * only at `builtAt`, the instant the caller listed `files` at), unless
+    * `prune` is off because the caller already chose the files by them. */
+  private[tables] def readFiles(files: Seq[FileMeta], builtAt: Option[String] = None,
+      prune: Boolean = true): DataFrame = {
     require(files.nonEmpty, s"no live files in ${cfg.path}")
     // With the accumulated union schema from _graft/schema.json the scan
     // needs NO schema-inference job (mergeSchema reads every footer on every
@@ -160,9 +164,9 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
         // from a metadata-served FileIndex — ZERO per-file LIST/HEAD
         // round-trips (S3CostModel measured the listed path at ~6 calls
         // per file just to rebuild statuses the commit already recorded)
-        MetaFileIndex.scan(spark,
-          files.map(f => (fs.makeQualified(new Path(dataPath(f.path))), f.len)),
-          sch)
+        MetaFileIndex.scan(spark, files,
+          f => fs.makeQualified(new Path(dataPath(f.path))), sch,
+          if (prune) pruneFiles(_, _, builtAt) else (all, _) => all)
       case Some(sch) =>
         spark.read.option("recursiveFileLookup", "true")
           .schema(sch).parquet(files.map(f => dataPath(f.path)): _*)
@@ -175,21 +179,19 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
 
   // cached union read schema (user schema + graft meta columns); invalidated
   // whenever this handle persists a new schema or drops columns
-  private var readSchemaCache: Option[Option[org.apache.spark.sql.types.StructType]] = None
+  // (a missing schema is not cached: another handle may write it later)
+  private var readSchemaCache: Option[StructType] = None
   private def invalidateReadSchema(): Unit = readSchemaCache = None
-  private def readSchema(): Option[org.apache.spark.sql.types.StructType] = {
-    readSchemaCache.getOrElse {
-      import org.apache.spark.sql.types._
-      val s = TableProperties.loadSchema(spark, cfg.path).map { user =>
+  private def readSchema(): Option[StructType] =
+    readSchemaCache.orElse {
+      readSchemaCache = TableProperties.loadSchema(spark, cfg.path).map { user =>
         StructType(user.fields.toSeq ++ Seq(
           StructField(GraftMeta.CommitTime, StringType),
           StructField(GraftMeta.RecordKey, StringType),
           StructField(GraftMeta.Deleted, BooleanType)))
       }
-      readSchemaCache = Some(s)
-      s
+      readSchemaCache
     }
-  }
 
   /** Absolute read path of a committed file: table-relative, or external
     * (`ext:`-prefixed, registered by [[bootstrap]] and never owned —
@@ -210,10 +212,6 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
         .drop("_graft_rn")
     }
 
-  /** For every file added by a commit visible at the bound: its adding
-    * instant and whether that commit was a `delta` (MOR un-merged updates
-    * and tombstones). Archived commits still answer (readCommit falls back
-    * to `_graft/archive/`). */
   /** The [[FileMeta]] rows under which `paths` were originally committed —
     * resolved by walking the (archived + hot) commit history's adds. Used
     * by derived CDC images of remove-only commits, whose Commit carries
@@ -224,6 +222,10 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
       .flatMap(i => timeline.readCommit(i).adds.filter(f => paths(f.path)))
       .distinctBy(_.path)
 
+  /** For every file added by a commit visible at the bound: its adding
+    * instant and whether that commit was a `delta` (MOR un-merged updates
+    * and tombstones). Archived commits still answer (readCommit falls back
+    * to `_graft/archive/`). */
   private def addCommits(asOf: Option[String]): Map[String, (String, Boolean)] =
     timeline.committedInstants()
       .filter(i => asOf.forall(i <= _))
@@ -246,7 +248,13 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     * folds everything into one base commit and restores the fast path). */
   private def snapshotWithMeta(asOf: Option[String],
       allowArchived: Boolean = false): DataFrame = {
+    // the instant this snapshot is, taken BEFORE its listing: its scans may
+    // ask the record index only while that is still the latest instant
+    val builtAt =
+      if (cfg.recordIndexBuckets > 0) timeline.latestInstant().filter(l => asOf.forall(l <= _))
+      else None
     val files = timeline.liveFiles(asOf, allowArchived)
+    def scan(part: Seq[FileMeta]): DataFrame = readFiles(part, builtAt)
     // zero live files is a VALID snapshot (a delete can empty the table, a
     // crashed first write leaves config+schema only): an empty frame with
     // the persisted schema, not an error
@@ -256,15 +264,15 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
     }
-    if (cfg.tableType == TableType.Cow) return readFiles(files)
+    if (cfg.tableType == TableType.Cow) return scan(files)
     val adders = addCommits(asOf)
     val dp = adders.collect { case (p, (_, true)) => p }.toSet
     val (delta, base) = files.partition(f => dp.contains(f.path))
     val baseCommits = base.flatMap(f => adders.get(f.path).map(_._1)).distinct
     if (delta.isEmpty || base.isEmpty || baseCommits.size > 1)
-      return resolve(readFiles(files))
-    val deltas = readFiles(delta)
-    val baseDf = readFiles(base)
+      return resolve(scan(files))
+    val deltas = scan(delta)
+    val baseDf = scan(base)
     val deltaKeys = deltas.select(keyCol).distinct()
     val untouched = baseDf.join(deltaKeys, Seq(cfg.keyField), "leftanti")
       // physically-resolved base rows can still carry tombstones from a
@@ -492,14 +500,20 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     if (withCommit) base.withColumn("_commit", lit(null).cast("string")) else base
   }
 
-  /** Key-based point lookup reading only bucket- and range-pruned files.
-    * Sound under MOR too: any delta/tombstone for key k contains k, so
-    * range+bucket pruning retains it and resolution sees every version. */
-  def pointLookup(keys: Seq[Any]): DataFrame = {
-    val files = lookupFiles(keys)
+  /** Key-based point lookup scanning only [[lookupFiles]]' files. Sound
+    * under MOR too: any delta/tombstone for key k contains k, so range and
+    * bucket pruning retain it and resolution sees every version. */
+  def pointLookup(keys: Seq[Any]): DataFrame =
+    readSubset(lookupFiles(keys)).filter(keyCol.isin(keys: _*))
+
+  /** Resolved rows of `files`, a file set the caller chose by an index or
+    * a partition rule to hold every version of the rows it asks for; its
+    * scan does not prune again (for pointLookup the pushed key filter would
+    * only repeat the bloom or record-index pass). No files read as the
+    * empty snapshot. */
+  private def readSubset(files: Seq[FileMeta]): DataFrame =
     if (files.isEmpty) read().filter(lit(false))
-    else dropInternal(resolve(readFiles(files).filter(keyCol.isin(keys: _*))))
-  }
+    else dropInternal(resolve(readFiles(files, prune = false)))
 
   /** Live files whose partition path satisfies the predicate — timeline
     * metadata pruning (no directory listing). Partition strings look like
@@ -511,32 +525,26 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     * scanned. Sound for keyed tables whose partition value is a function of
     * the record (our key generators), so every version of a record lives in
     * one partition. */
-  def readWhere(partitionPred: String => Boolean): DataFrame = {
-    val files = partitionFiles(partitionPred)
-    if (files.isEmpty) read().filter(lit(false))
-    else dropInternal(resolve(readFiles(files)))
-  }
+  def readWhere(partitionPred: String => Boolean): DataFrame =
+    readSubset(partitionFiles(partitionPred))
 
-  /** Live files that may contain rows with `column` in [lo, hi], pruned by
-    * the per-file column stats harvested at write time (data skipping — the
-    * Hudi col_stats index re-expressed as timeline metadata). Files written
-    * before `column` was a stats column, or with unsupported-type stats,
-    * are conservatively kept. */
+  /** Live files that may contain rows with `column` in [lo, hi] — the
+    * [[pruneFiles]] rule with one bound, so on a stats column the per-file
+    * column stats harvested at write time decide (data skipping — the Hudi
+    * col_stats index re-expressed as timeline metadata; COW only). Files
+    * written before `column` was a stats column, or with unsupported-type
+    * stats, are conservatively kept. */
   def filesBetween(column: String, lo: Any, hi: Any): Seq[FileMeta] =
-    timeline.liveFiles(None).filter(f =>
-      f.colStats.get(column).forall(_.overlaps(lo, hi)))
+    pruneFiles(timeline.liveFiles(None), Seq(ColBound(column, Some(lo), Some(hi))), None)
 
-  /** Stats-pruned range read: scans only [[filesBetween]]'s files, then
-    * applies the residual BETWEEN filter. Pairs with [[clusterZOrder]] /
+  /** Stats-pruned range read: `read()` filtered to [lo, hi], whose scan
+    * skips the files [[filesBetween]] drops. Pairs with [[clusterZOrder]] /
     * [[cluster]]: once rows are co-located by the column, most files prune
-    * away entirely — the scan is O(matching files), not O(table). COW only:
-    * under MOR a value-pruned scan could miss a newer delta version of a
-    * row and resolve an older one. */
+    * away entirely — the scan is O(matching files), not O(table). COW only,
+    * where the stats describe the rows a read returns. */
   def readBetween(column: String, lo: Any, hi: Any): DataFrame = {
     require(cfg.tableType == TableType.Cow, "readBetween requires a COW table")
-    val files = filesBetween(column, lo, hi)
-    if (files.isEmpty) read().filter(lit(false))
-    else dropInternal(readFiles(files)).filter(col(column).between(lo, hi))
+    read().filter(col(column).between(lo, hi))
   }
 
   /** Hudi-1.0-style PARTITION_STATS index: per-partition min/max of a
@@ -551,73 +559,91 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
       .groupBy(_._1)
       .map { case (p, sts) => p -> sts.map(_._2).reduce(_ merge _) }
 
-  /** Range scan pruned by the partition-stats index FIRST — whole
-    * partitions drop in O(#partitions) before any per-file metadata is
-    * consulted (the case path pruning cannot answer: a predicate on the
-    * RAW column when the partition path holds a derived value, e.g.
-    * p_month=1996-03 vs a timestamp range). Surviving partitions then
-    * prune per-file, and the residual filter re-applies the predicate.
-    * COW only, same reasoning as [[readBetween]].
-    *
-    * Conservatism matches [[filesBetween]]: a partition is prunable only
-    * when EVERY live file in it carries a stat for the column AND the
-    * merged [min,max] misses [lo,hi]. A stat-less file (written before
-    * the column joined statsCols, or with an unsupported-type stat) could
-    * hold matching rows, so its partition must survive the partition-level
-    * cut — the per-file pass below then keeps that file too (forall on a
-    * missing stat is true). */
-  def readBetweenPartitionStats(column: String, lo: Any, hi: Any): DataFrame = {
-    require(cfg.tableType == TableType.Cow,
-      "partition-stats read requires a COW table")
-    val live = timeline.liveFiles(None)
-    val prunedParts = live.groupBy(_.partition).collect {
-      case (p, fs) if fs.forall(_.colStats.contains(column)) &&
-          !fs.flatMap(_.colStats.get(column)).reduce(_ merge _)
-            .overlaps(lo, hi) => p
-    }.toSet
-    val files = live.filter(f =>
-      !prunedParts(f.partition) && f.colStats.get(column).forall(_.overlaps(lo, hi)))
-    if (files.isEmpty) read().filter(lit(false))
-    else dropInternal(readFiles(files)).filter(col(column).between(lo, hi))
+  /** Range scan the partition-stats rollup answers (the case path pruning
+    * cannot: a predicate on the RAW column when the partition path holds a
+    * derived value, e.g. p_month=1996-03 vs a timestamp range). A
+    * partition's merged [min,max] misses [lo,hi] exactly when every live
+    * file in it carries a stat that misses it (a stat-less file keeps its
+    * partition), so the per-file pass of [[readBetween]] keeps exactly the
+    * files a partition-level pass would: this is that read. COW only. */
+  def readBetweenPartitionStats(column: String, lo: Any, hi: Any): DataFrame =
+    readBetween(column, lo, hi)
+
+  /** Live files that may satisfy every given [[ColBound]] — the
+    * [[pruneFiles]] rule over the latest snapshot. */
+  def prunedLiveFiles(bounds: Seq[ColBound]): Seq[FileMeta] = {
+    val at = timeline.latestInstant() // before the listing, as in snapshotWithMeta
+    pruneFiles(timeline.liveFiles(None), bounds, at)
   }
 
-  /** Live files that may satisfy every given [[ColBound]], pruned purely
-    * from timeline metadata (no directory listing, no file reads except
-    * bloom footers for key equality):
+  /** Snapshot read restricted to the bounds; its scan skips the files
+    * [[prunedLiveFiles]] drops. Callers may re-apply their predicates. */
+  def readPruned(bounds: Seq[ColBound]): DataFrame =
+    read().filter(bounds.flatMap { b =>
+      b.lo.map(col(b.col) >= _) ++ b.hi.map(col(b.col) <= _) ++
+        b.inSet.map(vs => col(b.col).isin(vs: _*))
+    }.foldLeft(lit(true))(_ && _))
+
+  /** The one file-skipping rule, behind every scan's [[MetaFileIndex]]:
+    * the files of `files` that may hold a row satisfying every bound, from
+    * timeline metadata alone (no listing; file reads only for bloom footers
+    * on key equality):
     *   - bounds on a PARTITION column prune by the hive partition path;
-    *   - bounds on the RECORD KEY prune by per-file key ranges (and the
-    *     bucket index + parquet bloom filters for equality sets);
+    *   - bounds on the RECORD KEY prune by per-file key ranges; equality
+    *     sets also by bucket, then by the record index while `builtAt` is
+    *     still the latest instant (the index describes only the latest
+    *     snapshot), else by the parquet bloom filters;
     *   - bounds on a statsCol prune by per-file min/max — COW only (under
     *     MOR a newer delta version of a row can have a different value, so
     *     value pruning could resolve an older version).
     * Everything unanswerable conservatively keeps the file. */
-  def prunedLiveFiles(bounds: Seq[ColBound]): Seq[FileMeta] = {
-    val keyEq = bounds.collectFirst {
-      case b if b.col == cfg.keyField && b.inSet.nonEmpty => b.inSet.get
-    }
-    val base = keyEq match {
-      case Some(keys) => lookupFiles(keys) // range + bucket + bloom
-      case None => timeline.liveFiles(None)
-    }
+  private[tables] def pruneFiles(files: Seq[FileMeta], bounds: Seq[ColBound],
+      builtAt: Option[String]): Seq[FileMeta] = {
     val partCols = cfg.keyGen.partitionCols.toSet
     val statsOk = cfg.tableType == TableType.Cow
-    base.filter { f =>
+    // the key tiers compare padKey(value) with the footer's key strings and
+    // hash the value's string form cast to the stored key type; both match
+    // the writer only for integral and string keys (a DATE key's footer
+    // holds padded epoch days, a DOUBLE's string order is not its numeric
+    // order), so any other or unknown key type keeps every file
+    val keyType = readSchema().flatMap(_.find(_.name == cfg.keyField)).map(_.dataType)
+      .filter(Set[DataType](LongType, IntegerType, ShortType, ByteType, StringType))
+    val keyOk: Any => Boolean = v => keyType.exists {
+      case StringType => v.isInstanceOf[String]
+      case _ => v match { case _: Long | _: Int | _: Short | _: Byte => true; case _ => false }
+    }
+    val keys = bounds.collectFirst {
+      case b if b.col == cfg.keyField && b.inSet.exists(_.forall(keyOk)) => b.inSet.get
+    }
+    val padded = keys.map(_.map(padKey))
+    val buckets = keys.filter(_ => cfg.numBuckets > 0).map(_.map(k =>
+      MappingIndex.valueBucket(k.toString, cfg.numBuckets, keyType.get).toInt).toSet)
+    val kept = files.filter { f =>
       bounds.forall { b =>
         val partPass = !partCols(b.col) || partitionMayMatch(f.partition, b)
-        val statPass = !statsOk || f.colStats.get(b.col).forall(_.overlapsOpt(b.lo, b.hi))
-        val keyPass = b.col != cfg.keyField || keyRangeMayMatch(f, b)
+        val statPass = !statsOk || f.colStats.get(b.col).forall(st =>
+          st.overlaps(b.lo.orNull, b.hi.orNull) && b.inSet.forall(_.exists(v => st.overlaps(v, v))))
+        // padded-string order == numeric order for our non-negative keys
+        val keyPass = b.col != cfg.keyField ||
+          b.lo.forall(v => !keyOk(v) || padKey(v) <= f.maxKey) &&
+            b.hi.forall(v => !keyOk(v) || f.minKey <= padKey(v))
         partPass && statPass && keyPass
-      }
+      } && padded.forall(_.exists(k => f.minKey <= k && k <= f.maxKey)) &&
+        // bucket pruning is only sound for files assigned under THIS
+        // handle's modulus — after a rebucket, differently-bucketed files
+        // are kept
+        buckets.forall(bs => f.bucketMod != cfg.numBuckets || bs(f.bucket))
     }
-  }
-
-  /** Snapshot read over [[prunedLiveFiles]] (MOR resolution included, like
-    * pointLookup). Callers re-apply their predicates as residual filters —
-    * pruning only shrinks the file set, never the row semantics. */
-  def readPruned(bounds: Seq[ColBound]): DataFrame = {
-    val files = prunedLiveFiles(bounds)
-    if (files.isEmpty) read().filter(lit(false))
-    else dropInternal(resolve(readFiles(files)))
+    keys match {
+      case None => kept
+      case Some(ks) =>
+        val hits = builtAt.filter(_ => cfg.recordIndexBuckets > 0).flatMap(at =>
+          indexes.liveFilesFor(indexes.record, indexes.recordRoot, ks.map(padKey), Some(at)))
+          .map(_.map(_.path).toSet)
+        // the bloom filter on the key column has no false negatives: files
+        // that provably lack every key are skipped
+        kept.filter(f => hits.fold(bloomMayContain(new Path(dataPath(f.path)), ks))(_(f.path)))
+    }
   }
 
   // ------------------------------------------------------- expression index
@@ -884,9 +910,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
   def readExprBetween(name: String, lo: Any, hi: Any): DataFrame = {
     require(cfg.tableType == TableType.Cow, "readExprBetween requires a COW table")
     val (exprSql, _, _) = readExprMeta(name)
-    val files = exprIndexFiles(name, lo, hi)
-    if (files.isEmpty) read().filter(lit(false))
-    else dropInternal(readFiles(files)).filter(expr(exprSql).between(lit(lo), lit(hi)))
+    readSubset(exprIndexFiles(name, lo, hi)).filter(expr(exprSql).between(lit(lo), lit(hi)))
   }
 
   // ---------------------------------------------------- pre-commit validators
@@ -953,9 +977,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     if (vs.nonEmpty) graft.sources.FsCalls.withPhase("precommit_validate") {
       val removed = c.removes.toSet
       val files = timeline.liveFiles(None).filterNot(f => removed(f.path)) ++ c.adds
-      val candidate =
-        if (files.isEmpty) read().filter(lit(false))
-        else dropInternal(resolve(readFiles(files)))
+      val candidate = readSubset(files)
       // Validators are written against the documented view name
       // `graft_candidate`, but the view registered is PER-COMMIT unique.
       // The instant alone is NOT unique across tables (instants are
@@ -1003,23 +1025,14 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     }
   }
 
-  /** Whether a file's key range may satisfy the bound on the record key
-    * (padded-string order == numeric order for our non-negative keys). */
-  private def keyRangeMayMatch(f: FileMeta, b: ColBound): Boolean = {
-    val loOk = b.lo.forall(v => padKey(v) <= f.maxKey)
-    val hiOk = b.hi.forall(v => f.minKey <= padKey(v))
-    loOk && hiOk
-  }
-
   /** Which hash bucket a key routes to — the debugging helper the reference
     * ships as flink/helpers/FindBucketNumber.java. */
   def bucketFor(key: Any): Int = {
     require(cfg.numBuckets > 0, s"table ${cfg.path} has no bucket index")
-    import spark.implicits._
-    val keyType = read().schema(cfg.keyField).dataType
-    Seq(key.toString).toDF("k")
-      .select(pmod(xxhash64(col("k").cast(keyType)), lit(cfg.numBuckets)).as("b"))
-      .head().getLong(0).toInt
+    // hashed as the STORED key type, like the writer's bucket column: an
+    // int key against a long column must hash 8 bytes, not 4
+    val keyType = readSchema().getOrElse(read().schema)(cfg.keyField).dataType
+    MappingIndex.valueBucket(key.toString, cfg.numBuckets, keyType).toInt
   }
 
   /** Pad an integral key to match keyStr/footerKeyStats normalization — an
@@ -1035,85 +1048,43 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
 
   /** The pruned file set a point lookup touches (exposed for tests). With a
     * record index enabled, the exact file set comes from ONE index-bucket
-    * read; otherwise key-range stats + bucket index + bloom filters prune. */
+    * read — exact only on a quiet timeline with every live file of an
+    * uncovered instant kept (MappingIndex.read); otherwise the
+    * [[pruneFiles]] rule (range, bucket, bloom), which is exact on any
+    * single consistent snapshot. */
   def lookupFiles(keys: Seq[Any]): Seq[FileMeta] = {
-    val padded = keys.map(padKey)
-    // RECORD-INDEX path: exact only on a quiet timeline with every live
-    // file of an uncovered instant kept (MappingIndex.read); otherwise
-    // range/bucket/bloom pruning, which is exact on any single consistent
-    // snapshot
-    if (cfg.recordIndexBuckets > 0)
-      indexes.liveFilesFor(indexes.record, indexes.recordRoot, padded) match {
-        case Some(files) => return files
-        case None => ()
-      }
-    val live = timeline.liveFiles(None)
-    val buckets: Set[Int] =
-      if (cfg.numBuckets <= 0) Set.empty
-      else {
-        val kdf = spark.createDataFrame(
-          spark.sparkContext.parallelize(keys.map(k => org.apache.spark.sql.Row(k.toString)), 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.StringType))))
-        // bucket is computed on the key's ORIGINAL type; cast back before hashing
-        val keyType = read().schema(cfg.keyField).dataType
-        kdf.select(pmod(xxhash64(col("k").cast(keyType)), lit(cfg.numBuckets)).as("b"))
-          .distinct().collect().map(_.getLong(0).toInt).toSet
-      }
-    val ranged = live.filter { f =>
-      // bucket pruning is only sound for files assigned under THIS handle's
-      // modulus — after a rebucket, differently-bucketed files are kept
-      val bucketOk = cfg.numBuckets <= 0 || f.bucketMod != cfg.numBuckets ||
-        buckets.contains(f.bucket)
-      val rangeOk = padded.exists(k => f.minKey <= k && k <= f.maxKey)
-      bucketOk && rangeOk
-    }
-    // final pruning level: the parquet bloom filter on the key column (no
-    // false negatives, so results are unchanged — files that survive range
-    // and bucket checks but provably lack every key are skipped)
-    ranged.filter(f => bloomMayContain(new Path(s"${cfg.path}/${f.path}"), keys))
+    val indexed =
+      if (cfg.recordIndexBuckets <= 0) None
+      else indexes.liveFilesFor(indexes.record, indexes.recordRoot, keys.map(padKey))
+    indexed.getOrElse(pruneFiles(timeline.liveFiles(None),
+      Seq(ColBound(cfg.keyField, inSet = Some(keys))), None))
   }
 
   /** True unless the file's key-column bloom filter excludes EVERY key.
     * Conservative: any missing bloom or unsupported key type keeps the
     * file. */
   private def bloomMayContain(p: Path, keys: Seq[Any]): Boolean = {
+    import scala.jdk.CollectionConverters._
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     try {
       val reader = ParquetFileReader.open(
         HadoopInputFile.fromPath(p, spark.sparkContext.hadoopConfiguration))
-      try {
-        val blocks = reader.getFooter.getBlocks
-        var anyMaybe = false
-        blocks.forEach { b =>
-          if (!anyMaybe) {
-            b.getColumns.forEach { c =>
-              if (!anyMaybe && c.getPath.toDotString == cfg.keyField) {
-                val bloom = reader.getBloomFilterDataReader(b).readBloomFilter(c)
-                if (bloom == null) anyMaybe = true // no bloom written: keep
-                else {
-                  // hash with the COLUMN's physical width, not the caller's
-                  // boxed type — an Int key against an INT64 column would
-                  // otherwise hash 4 bytes and false-negative every file
-                  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-                  val physical = c.getPrimitiveType.getPrimitiveTypeName
-                  val hit = keys.exists { k =>
-                    (k, physical) match {
-                      case (n: Number, INT64) => bloom.findHash(bloom.hash(n.longValue()))
-                      case (n: Number, INT32) => bloom.findHash(bloom.hash(n.intValue()))
-                      case (s: String, BINARY) => bloom.findHash(
-                        bloom.hash(org.apache.parquet.io.api.Binary.fromString(s)))
-                      case _ => true // unsupported key/physical combo: keep
-                    }
-                  }
-                  if (hit) anyMaybe = true
-                }
-              }
-            }
-          }
+      try reader.getFooter.getBlocks.asScala.exists { b =>
+        b.getColumns.asScala.filter(_.getPath.toDotString == cfg.keyField).exists { c =>
+          val bloom = reader.getBloomFilterDataReader(b).readBloomFilter(c)
+          // hash with the COLUMN's physical width, not the caller's boxed
+          // type — an Int key against an INT64 column would otherwise hash
+          // 4 bytes and false-negative every file
+          bloom == null || keys.exists(k => (k, c.getPrimitiveType.getPrimitiveTypeName) match {
+            case (n: Number, INT64) => bloom.findHash(bloom.hash(n.longValue()))
+            case (n: Number, INT32) => bloom.findHash(bloom.hash(n.intValue()))
+            case (s: String, BINARY) => bloom.findHash(
+              bloom.hash(org.apache.parquet.io.api.Binary.fromString(s)))
+            case _ => true // unsupported key/physical combo: keep
+          })
         }
-        anyMaybe
       } finally reader.close()
     } catch {
       case _: Exception => true // unreadable metadata: keep the file
@@ -1276,8 +1247,9 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
         // (hive layout stores those as directories, not in the files)
         val writtenSchema = org.apache.spark.sql.types.StructType(
           out.schema.filterNot(f => partCols.contains(f.name)))
-        val written = MetaFileIndex.scan(spark,
-          listed.map { case (p, l) => (fs.makeQualified(p), l) }, writtenSchema)
+        val written = MetaFileIndex.scan(spark, listed.map { case (p, l) =>
+            FileMeta(fs.makeQualified(p).toString, "", 0, "", "", 0L, len = l) },
+          f => new Path(f.path), writtenSchema, (all, _) => all)
         val siCols = cfg.secondaryIndexCols.filter(written.columns.contains)
         val proj = written.select(
           (Seq(keyStr(keyCol, written).as("_gik"), col("_metadata.file_path").as("_gif")) ++
@@ -1405,10 +1377,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     // doubles, decimals etc. format differently — a mismatch would return
     // EMPTY results, not an error, so they scan instead)
     val stable = readSchema().flatMap(_.find(_.name == column)).map(_.dataType).exists {
-      case org.apache.spark.sql.types.StringType => true
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.BooleanType => true
+      case StringType | LongType | IntegerType | ShortType | ByteType | BooleanType => true
       case _ => false
     }
     if (!stable) return None
@@ -1437,8 +1406,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
             (files ++ deltas).distinctBy(_.path)
           }
         // values absent from the index: an EMPTY result, not a read error
-        if (readSet.isEmpty) read().filter(lit(false))
-        else dropInternal(resolve(readFiles(readSet))).filter(pred)
+        readSubset(readSet).filter(pred)
       case None => read().filter(pred)
     }
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** What really differs between the two mapping indexes — the record index
   * (padded key → data file, `_graft/rli`) and the secondary index (value →
@@ -143,10 +143,13 @@ private[tables] final class MappingIndex(spark: SparkSession, fs: FileSystem,
     * string form), or None when the index cannot serve exactly — no index
     * data, timeline churn, fold-guard exhaustion. The caller then prunes
     * or scans by other means, which is always correct. Live files of
-    * UNCOVERED instants stay candidates. */
-  def liveFilesFor(kind: IndexKind, root: Path, values: Seq[String]): Option[Seq[FileMeta]] =
+    * UNCOVERED instants stay candidates. With `at`, the read serves only
+    * while `at` is the latest instant (a scan planned against that
+    * snapshot), else None. */
+  def liveFilesFor(kind: IndexKind, root: Path, values: Seq[String],
+      at: Option[String] = None): Option[Seq[FileMeta]] =
     read(kind, root, m => values.map(valueBucket(_, m)).toSet,
-      _.filter(col(kind.entryCol).isin(values: _*))) { (hits, covered) =>
+      _.filter(col(kind.entryCol).isin(values: _*)), at) { (hits, covered) =>
       timeline.liveFiles(None).filter(f => hits(f.path) || !covered(f))
     }
 
@@ -196,13 +199,14 @@ private[tables] final class MappingIndex(spark: SparkSession, fs: FileSystem,
     * existence probe per bucket and no listing of the instant dir. The
     * schema is explicit, so no inference job and no footer round-trips. */
   private def read[T](kind: IndexKind, root: Path, bucketsFor: Int => Set[Long],
-      matching: DataFrame => DataFrame)(use: (Set[String], FileMeta => Boolean) => T)
-      : Option[T] = {
+      matching: DataFrame => DataFrame, at: Option[String] = None)(
+      use: (Set[String], FileMeta => Boolean) => T): Option[T] = {
     if (!fs.exists(root)) return None
     var attempts = 0
     while (attempts < 4) {
       attempts += 1
       val i0 = timeline.latestInstant()
+      if (at.nonEmpty && i0 != at) return None
       guarded(root) { dirs =>
         if (dirs.isEmpty) None
         else {
@@ -617,13 +621,15 @@ private[tables] object MappingIndex {
     case _ => None
   }
 
-  /** Bucket id of one entry under `b` buckets — the DRIVER-LOCAL twin of
+  /** Bucket id of one value under `b` buckets — the DRIVER-LOCAL twin of
     * the engine expression the writes use (`pmod(xxhash64(e), b)`: XxHash64
-    * seed 42 over the UTF-8 string), so a lookup computes its target
-    * buckets without a Spark job. */
-  def valueBucket(v: String, b: Int): Long = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    val h = new XxHash64(Seq(Literal.create(v, StringType))).eval(null).asInstanceOf[Long]
+    * seed 42 over `v` cast to the stored type `as`), so a lookup or a scan
+    * plan computes its target buckets without a Spark job. */
+  def valueBucket(v: String, b: Int, as: DataType = StringType): Long = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
+    val e = Cast(Literal.create(v, StringType), as,
+      Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone))
+    val h = new XxHash64(Seq(e)).eval(null).asInstanceOf[Long]
     ((h % b) + b) % b
   }
 

@@ -32,16 +32,23 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Any other physical/logical combination poisons the column for the file,
   * so every skip check conservatively keeps it. */
 final case class ColStat(kind: String, min: String, max: String) {
-  /** True unless this file's range provably misses [lo, hi]. Bounds whose
-    * runtime type doesn't match `kind` (e.g. a java.sql.Date against plain
-    * numeric stats) are unanswerable: the file is kept, never pruned. */
-  def overlaps(lo: Any, hi: Any): Boolean =
-    (ColStat.bound(kind, lo), ColStat.bound(kind, hi)) match {
-      case (Some(l: String), Some(h: String)) => min <= h && l <= max
-      case (Some(l: java.lang.Double), Some(h: java.lang.Double)) =>
-        min.toDouble <= h && l <= max.toDouble
+  /** True unless this file's range provably misses [lo, hi]. A null side
+    * is unbounded, and so is a bound whose runtime type doesn't match
+    * `kind` (e.g. a java.sql.Date against plain numeric stats): it cannot
+    * prune, so only the other side may. */
+  def overlaps(lo: Any, hi: Any): Boolean = {
+    val loOk = ColStat.bound(kind, lo).forall {
+      case l: String => l <= max
+      case l: java.lang.Double => l <= max.toDouble
       case _ => true
     }
+    val hiOk = ColStat.bound(kind, hi).forall {
+      case h: String => min <= h
+      case h: java.lang.Double => min.toDouble <= h
+      case _ => true
+    }
+    loOk && hiOk
+  }
 
   /** Union of two ranges of the same kind — the partition-stats rollup
     * (file stats → one per-partition ColStat). Lex compares as strings,
@@ -55,23 +62,6 @@ final case class ColStat(kind: String, min: String, max: String) {
       ColStat(kind,
         if (min.toDouble <= o.min.toDouble) min else o.min,
         if (max.toDouble >= o.max.toDouble) max else o.max)
-  }
-
-  /** [[overlaps]] with optional (half-open) bounds: a None side is
-    * unbounded, and a bound whose type doesn't convert is treated as
-    * unbounded too (keep the file). */
-  def overlapsOpt(lo: Option[Any], hi: Option[Any]): Boolean = {
-    val loOk = lo.flatMap(v => ColStat.bound(kind, v)).forall {
-      case l: String => l <= max
-      case l: java.lang.Double => l <= max.toDouble
-      case _ => true
-    }
-    val hiOk = hi.flatMap(v => ColStat.bound(kind, v)).forall {
-      case h: String => min <= h
-      case h: java.lang.Double => min.toDouble <= h
-      case _ => true
-    }
-    loOk && hiOk
   }
 }
 

@@ -14,7 +14,9 @@ import org.apache.spark.sql.types.StructType
   *    DataFrame whose logical plan is flagged isStreaming, which has no
   *    public constructor.
   *  - `column` / `ofRows`: Column↔Expression conversion and building a
-  *    DataFrame from a logical plan, for the graft SQL surface. */
+  *    DataFrame from a logical plan, for the graft SQL surface.
+  *  - `translateFilter`: a pushed scan predicate as a source `Filter`, for
+  *    the file skipping in graft's metadata FileIndex. */
 object GraftSqlShim {
 
   def internalCreateDataFrame(
@@ -27,6 +29,10 @@ object GraftSqlShim {
 
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  def translateFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = true)
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
