@@ -111,33 +111,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
       partitions: Array[Transform],
       properties: util.Map[String, String]): Table = {
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    val props = properties.asScala
-    def prop(keys: String*): Option[String] = keys.flatMap(props.get).headOption
-    val key = prop("graft.key", "primaryKey").getOrElse(throw new IllegalArgumentException(
-      s"CREATE TABLE $ident requires TBLPROPERTIES (primaryKey = '<col>')"))
-    val keyGen = partitions.toSeq match {
-      case Nil => NoPartition
+    val part = partitions.toSeq match {
+      case Nil => Nil
       case Seq(id) if id.name == "identity" =>
-        FieldPartition(id.references()(0).fieldNames().mkString("."))
+        Seq(TableProperties.Partition -> id.references()(0).fieldNames().mkString("."))
       case other => throw new IllegalArgumentException(
         s"only identity PARTITIONED BY columns are supported, got ${other.mkString(", ")}")
     }
-    val cfg = GraftTableConfig(
-      path = tablePathOf(ident.namespace(), ident.name()),
-      keyField = key,
-      precombineField = prop("graft.precombine", "preCombineField").getOrElse(key),
-      keyGen = keyGen,
-      numBuckets = prop("graft.buckets").map(_.toInt).getOrElse(0),
-      writeChangelog = prop("graft.changelog").exists(_.toBoolean),
-      tableType = prop("graft.type", "type").map {
-        case "mor" | "MERGE_ON_READ" => TableType.Mor
-        case _ => TableType.Cow
-      }.getOrElse(TableType.Cow),
-      statsCols = prop("graft.statsCols", "statsCols")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil),
-      recordIndexBuckets =
-        prop("graft.recordIndexBuckets", "recordIndexBuckets").map(_.toInt).getOrElse(0))
-    require(schema.fieldNames.contains(key), s"primaryKey $key is not a column of $ident")
+    val cfg = TableProperties.fromOptions(tablePathOf(ident.namespace(), ident.name()),
+      properties.asScala.toMap ++ part)
+    require(cfg.keyField.nonEmpty, s"CREATE TABLE $ident requires TBLPROPERTIES (primaryKey = '<col>')")
+    require(schema.fieldNames.contains(cfg.keyField),
+      s"primaryKey ${cfg.keyField} is not a column of $ident")
     TableProperties.save(spark, cfg)
     TableProperties.saveSchema(spark, cfg.path, schema)
     new GraftV2Table(cfg, ident, asOf = None)
@@ -274,11 +259,7 @@ final class GraftV2Table(
     cfg.keyGen.partitionCols.map(Expressions.identity).toArray
 
   override def properties(): util.Map[String, String] =
-    Map(
-      "primaryKey" -> cfg.keyField,
-      "preCombineField" -> cfg.precombineField,
-      "type" -> cfg.tableType,
-      TableCatalog.PROP_LOCATION -> cfg.path).asJava
+    (TableProperties.toOptions(cfg) + (TableCatalog.PROP_LOCATION -> cfg.path)).asJava
 
   override def version(): String =
     asOf.orElse(table.timeline.latestInstant()).orNull

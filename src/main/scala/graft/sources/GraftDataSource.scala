@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.tables.{ColBound, FieldPartition, GraftTable, GraftTableConfig, KeyGen, NoPartition, TimestampDayPartition}
+import graft.tables.{ColBound, GraftTable, GraftTableConfig, TableProperties}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SQLContext}
 import org.apache.spark.sql.functions.{col, lit}
@@ -13,15 +13,10 @@ import org.apache.spark.sql.types.StructType
   * .mode("append").save(path)` / `spark.read.format("hudi").load(path)`).
   *
   * Write options:
-  *   - `graft.key` (required): record key field
-  *   - `graft.precombine` (default = key): precombine field, highest wins
+  *   - the table options (`graft.key`, required on a new table, and the
+  *     rest): see the README "Table options" table. They overlay the
+  *     options stored in `_graft/config.json`.
   *   - `graft.operation`: upsert (default) | insert
-  *   - `graft.partition`: hive-style partition field
-  *   - `graft.partition.day.from`: timestamp field → yyyy-MM-dd partition
-  *   - `graft.buckets`: hash-bucket count for the bucket index
-  *   - `graft.changelog`: true to materialize CDC images
-  *   - `graft.statsCols`: comma-separated columns to track per-file min/max
-  *     for data skipping (readBetween)
   *   SaveMode.Overwrite recreates the table; Append applies the operation.
   *
   * Read options:
@@ -101,7 +96,7 @@ class GraftDataSource
       // fall back to the schema persisted at write time rather than crash
       val base =
         if (table.timeline.liveFiles(None).nonEmpty) table.read().schema
-        else graft.tables.TableProperties.loadSchema(spark, path).getOrElse(
+        else TableProperties.loadSchema(spark, path).getOrElse(
           throw new IllegalArgumentException(
             s"graft table at $path has no committed data and no persisted " +
               "schema yet; pass .schema(...) to readStream"))
@@ -199,45 +194,16 @@ class GraftDataSource
 
 object GraftDataSource {
 
-  private def keyGenOf(parameters: Map[String, String]): KeyGen =
-    parameters.get("graft.partition").map(FieldPartition.apply)
-      .orElse(parameters.get("graft.partition.day.from").map(f => TimestampDayPartition(f)))
-      .getOrElse(NoPartition)
-
-  /** Effective config: the persisted table config (written on first write,
-    * like hoodie.properties) serves as the base; explicit options override
-    * it. A brand-new table needs at least graft.key. Public so config-driven
+  /** Effective config: the persisted table options (written on first
+    * write, like hoodie.properties) overlaid by the call's options. A
+    * brand-new table needs at least graft.key. Public so config-driven
     * entry points (DeltaStream) resolve options identically to the source. */
   def effectiveConfig(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      parameters: Map[String, String]): GraftTableConfig = {
-    val stored = graft.tables.TableProperties.load(spark, path)
-    val key = parameters.get("graft.key")
-      .orElse(stored.map(_.keyField)).getOrElse("")
-    GraftTableConfig(
-      path = path,
-      keyField = key,
-      precombineField = parameters.get("graft.precombine")
-        .orElse(stored.map(_.precombineField)).getOrElse(key),
-      keyGen = if (parameters.contains("graft.partition") ||
-          parameters.contains("graft.partition.day.from")) keyGenOf(parameters)
-        else stored.map(_.keyGen).getOrElse(NoPartition),
-      numBuckets = parameters.get("graft.buckets").map(_.toInt)
-        .orElse(stored.map(_.numBuckets)).getOrElse(0),
-      writeChangelog = parameters.get("graft.changelog").map(_.toBoolean)
-        .orElse(stored.map(_.writeChangelog)).getOrElse(false),
-      tableType = parameters.get("graft.type")
-        .orElse(stored.map(_.tableType)).getOrElse(graft.tables.TableType.Cow),
-      statsCols = parameters.get("graft.statsCols")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .orElse(stored.map(_.statsCols)).getOrElse(Nil),
-      recordIndexBuckets = parameters.get("graft.recordIndexBuckets").map(_.toInt)
-        .orElse(stored.map(_.recordIndexBuckets)).getOrElse(0),
-      secondaryIndexCols = parameters.get("graft.secondaryIndexCols")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .orElse(stored.map(_.secondaryIndexCols)).getOrElse(Nil))
-  }
+      parameters: Map[String, String]): GraftTableConfig =
+    TableProperties.fromOptions(path, TableProperties.overlay(
+      TableProperties.loadOptions(spark, path).getOrElse(Map.empty), parameters))
 }
 
 /** Relation backed by the table's snapshot plan. Pushed filters are

@@ -117,7 +117,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
   private def ensureConfig(): Unit =
     if (!configSaved) { TableProperties.save(spark, cfg); configSaved = true }
   private val root = new Path(cfg.path)
-  private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[tables] val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def rootStr: String = fs.makeQualified(root).toUri.getPath
   /** The record index and the secondary indexes: one layout, one read
     * path, one fold ([[MappingIndex]]). */
@@ -293,17 +293,10 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
 
   /** Columns dropped via [[dropColumns]] — hidden from every read path. */
   private def droppedCols: Seq[String] = droppedCache.getOrElse {
-    val d =
-      if (!fs.exists(droppedPath)) Seq.empty[String]
-      else {
-        val in = fs.open(droppedPath)
-        val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-        val arr = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(new String(bytes, "UTF-8"))
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        arr.forEach(n => buf += n.asText())
-        buf.toSeq
-      }
+    val d = TableProperties.readJson(fs, droppedPath).fold(Seq.empty[String]) { arr =>
+      import scala.jdk.CollectionConverters._
+      arr.asScala.map(_.asText()).toSeq
+    }
     droppedCache = Some(d)
     d
   }
@@ -347,12 +340,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     timeline.withMetaLock {
       droppedCache = None // fresh read under the lock: see cross-handle drops
       val merged = (droppedCols ++ colsToDrop).distinct
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val arr = mapper.createArrayNode()
-      merged.foreach(arr.add)
-      val out = fs.create(droppedPath, true)
-      out.write(mapper.writeValueAsBytes(arr))
-      out.close()
+      TableProperties.writeJson(fs, droppedPath, merged)
       droppedCache = Some(merged)
       // keep the persisted streaming-source schema in sync
       TableProperties.loadSchema(spark, cfg.path).foreach { sch =>
@@ -584,6 +572,15 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
         b.inSet.map(vs => col(b.col).isin(vs: _*))
     }.foldLeft(lit(true))(_ && _))
 
+  /** The stored key type when the footer key strings order like the key:
+    * integral (padded) or string. Any other or unknown key type has no key
+    * range (a DATE key's footer holds padded epoch days while a batch key
+    * casts to `2020-01-05`; a DOUBLE's `"5.0"` sorts after `"40.0"`), so
+    * every key-range tier keeps every file. */
+  private def rangeKeyType: Option[DataType] =
+    readSchema().flatMap(_.find(_.name == cfg.keyField)).map(_.dataType)
+      .filter(Set[DataType](LongType, IntegerType, ShortType, ByteType, StringType))
+
   /** The one file-skipping rule, behind every scan's [[MetaFileIndex]]:
     * the files of `files` that may hold a row satisfying every bound, from
     * timeline metadata alone (no listing; file reads only for bloom footers
@@ -601,13 +598,9 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
       builtAt: Option[String]): Seq[FileMeta] = {
     val partCols = cfg.keyGen.partitionCols.toSet
     val statsOk = cfg.tableType == TableType.Cow
-    // the key tiers compare padKey(value) with the footer's key strings and
-    // hash the value's string form cast to the stored key type; both match
-    // the writer only for integral and string keys (a DATE key's footer
-    // holds padded epoch days, a DOUBLE's string order is not its numeric
-    // order), so any other or unknown key type keeps every file
-    val keyType = readSchema().flatMap(_.find(_.name == cfg.keyField)).map(_.dataType)
-      .filter(Set[DataType](LongType, IntegerType, ShortType, ByteType, StringType))
+    // the key tiers also hash the value's string form cast to the stored
+    // key type, which matches the writer for these key types only
+    val keyType = rangeKeyType
     val keyOk: Any => Boolean = v => keyType.exists {
       case StringType => v.isInstanceOf[String]
       case _ => v match { case _: Long | _: Int | _: Short | _: Byte => true; case _ => false }
@@ -746,25 +739,16 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
 
   private def writeExprMeta(name: String, exprSql: String, kind: String,
       buckets: Int): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("expr", exprSql)
-    root.put("kind", kind)
-    root.put("buckets", buckets)
     fs.mkdirs(exprIndexMetaPath(name).getParent)
-    TableProperties.atomicWrite(fs, exprIndexMetaPath(name),
-      mapper.writeValueAsBytes(root))
+    TableProperties.writeJson(fs, exprIndexMetaPath(name),
+      Map("expr" -> exprSql, "kind" -> kind, "buckets" -> buckets))
   }
 
   /** (expr, kind, buckets). Meta files written before the bucket knob
     * existed carry no count and read as the 16 they were sharded with. */
   private def readExprMeta(name: String): (String, String, Int) = {
-    val p = exprIndexMetaPath(name)
-    require(fs.exists(p), s"no expression index '$name' on table ${cfg.path}")
-    val in = fs.open(p)
-    val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new String(bytes, "UTF-8"))
+    val root = TableProperties.readJson(fs, exprIndexMetaPath(name)).getOrElse(
+      throw new IllegalArgumentException(s"no expression index '$name' on table ${cfg.path}"))
     val buckets =
       if (root.has("buckets")) root.get("buckets").asInt() else ExprIndexDefaultBuckets
     (root.get("expr").asText(), root.get("kind").asText(), buckets)
@@ -923,25 +907,14 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     * validation; one small JSON read per commit is noise next to the
     * commit itself. */
   private def validators: Seq[(String, String)] =
-    if (!fs.exists(validatorsPath)) Seq.empty[(String, String)]
-    else {
-      val in = fs.open(validatorsPath)
-      val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-      val arr = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new String(bytes, "UTF-8"))
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      arr.forEach(n => buf += (n.get("name").asText() -> n.get("sql").asText()))
-      buf.toSeq
+    TableProperties.readJson(fs, validatorsPath).fold(Seq.empty[(String, String)]) { arr =>
+      import scala.jdk.CollectionConverters._
+      arr.asScala.map(n => n.get("name").asText() -> n.get("sql").asText()).toSeq
     }
 
-  private def saveValidators(vs: Seq[(String, String)]): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val arr = mapper.createArrayNode()
-    vs.foreach { case (n, q) =>
-      val o = arr.addObject(); o.put("name", n); o.put("sql", q)
-    }
-    TableProperties.atomicWrite(fs, validatorsPath, mapper.writeValueAsBytes(arr))
-  }
+  private def saveValidators(vs: Seq[(String, String)]): Unit =
+    TableProperties.writeJson(fs, validatorsPath,
+      vs.map { case (n, q) => Map("name" -> n, "sql" -> q) })
 
   /** Register a PRE-COMMIT VALIDATOR (Hudi's SqlQueryPreCommitValidator
     * family): `violationSql` runs against the temp view `graft_candidate` —
@@ -1654,8 +1627,9 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
           val (bMin, bMax) = (r.getString(0), r.getString(1))
           val buckets: Set[Int] =
             if (cfg.numBuckets <= 0) Set.empty else r.getSeq[Long](3).map(_.toInt).toSet
+          val ranged = rangeKeyType.isDefined
           val cand = live.filter { f =>
-            f.minKey <= bMax && bMin <= f.maxKey &&
+            (!ranged || f.minKey <= bMax && bMin <= f.maxKey) &&
               (cfg.numBuckets <= 0 || f.bucketMod != cfg.numBuckets || buckets.contains(f.bucket))
           }
           // index-served tagging first (its bill rides the batch's index
@@ -1915,9 +1889,8 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     require(sortCols.size >= 2, "clusterZOrder needs at least 2 columns")
     // parsed BEFORE the instant is reserved: a bad value fails the call
     // with the key named and leaves the table untouched
-    val pinMax = spark.conf.getOption(GraftTable.ZOrderPinMaxKey).map(v => v.trim.toLongOption.getOrElse(
-      throw new IllegalArgumentException(s"${GraftTable.ZOrderPinMaxKey} must be a byte count, got '$v'")))
-      .getOrElse(4L << 30)
+    val pinMax = spark.conf.getOption(GraftTable.ZOrderPinMaxKey)
+      .fold(4L << 30)(TableProperties.parseCount(GraftTable.ZOrderPinMaxKey, _))
     rewriteFileSet("cluster") { (snap, live, instant) =>
       // one job computes every dimension's min/max
       val r = snap.agg(
@@ -2439,9 +2412,11 @@ object GraftTable {
     * value to exercise the executor path at sandbox scale. */
   private[tables] val FooterHarvestDriverMaxDefault = 1024
 
+  private val FooterHarvestDriverMaxKey = "spark.graft.footerHarvest.driverMaxFiles"
+
   private[tables] def footerHarvestDriverMax(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption("spark.graft.footerHarvest.driverMaxFiles")
-      .map(_.toInt).getOrElse(FooterHarvestDriverMaxDefault)
+    spark.conf.getOption(FooterHarvestDriverMaxKey).fold(FooterHarvestDriverMaxDefault)(
+      TableProperties.parseCount(FooterHarvestDriverMaxKey, _, Int.MaxValue).toInt)
 
   /** The commit-time footer→[[FileMeta]] harvest, two-tiered by file
     * count. At or under `driverMax` files it runs on the bounded driver

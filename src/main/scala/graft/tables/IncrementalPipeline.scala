@@ -1,6 +1,7 @@
 package graft.tables
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
@@ -21,8 +22,6 @@ import org.apache.spark.sql.DataFrame
   */
 object IncrementalPipeline {
 
-  private val mapper = new ObjectMapper()
-
   private def metaKey(sourceId: String) = s"graft.watermark.$sourceId"
 
   private def watermarkPath(target: GraftTable, sourceId: String): Path =
@@ -35,34 +34,19 @@ object IncrementalPipeline {
     val fromCommits = target.timeline.instants()
       .flatMap(i => target.timeline.readCommit(i).meta.get(metaKey(sourceId)))
       .maxOption
-    val fs = new Path(target.cfg.path).getFileSystem(
-      target.spark.sparkContext.hadoopConfiguration)
-    val p = watermarkPath(target, sourceId)
-    // the hint is best-effort: a torn/partial file (crashed writer) must
-    // fall back to the authoritative commit-meta watermark, not crash
+    // the hint is best-effort: an unreadable hint file must fall back to
+    // the authoritative commit-meta watermark, not crash
     val fromFile =
-      if (!fs.exists(p)) None
-      else try {
-        val in = fs.open(p)
-        val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-        Some(mapper.readTree(new String(bytes, "UTF-8")).get("instant").asText())
-      } catch { case scala.util.control.NonFatal(_) => None }
+      try TableProperties.readJson(target.fs, watermarkPath(target, sourceId))
+        .map(_.get("instant").asText())
+      catch { case NonFatal(_) => None }
     (fromCommits.toSeq ++ fromFile.toSeq).maxOption
   }
 
-  private def saveWatermark(target: GraftTable, sourceId: String, instant: String): Unit = {
-    val fs = new Path(target.cfg.path).getFileSystem(
-      target.spark.sparkContext.hadoopConfiguration)
-    val p = watermarkPath(target, sourceId)
-    // temp + rename: concurrent readers see old-or-new, never half-written
-    val tmp = new Path(p.getParent, s".tmp-${p.getName}-${System.nanoTime()}")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"instant": "$instant"}""".getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, p)) {
-      fs.delete(p, false)
-      if (!fs.rename(tmp, p)) fs.delete(tmp, false) // hint only: give up quietly
-    }
-  }
+  private def saveWatermark(target: GraftTable, sourceId: String, instant: String): Unit =
+    try TableProperties.writeJson(target.fs, watermarkPath(target, sourceId),
+      Map("instant" -> instant))
+    catch { case _: IllegalStateException => () } // hint only: give up quietly
 
   /** Process everything upstream since the watermark. `transform` maps the
     * incremental rows (latest state of changed records) to the target's

@@ -1,6 +1,5 @@
 package graft.tables
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 
 /** Table maintenance services around GraftTable — the analogues of the
@@ -27,9 +26,7 @@ object TableServices {
     if (sinceCompact.isEmpty) return None
     val numTrigger = sinceCompact.size >= deltaCommits
     val oldest = sinceCompact.last
-    val fs = new Path(table.cfg.path).getFileSystem(
-      table.spark.sparkContext.hadoopConfiguration)
-    val oldestMs = fs.getFileStatus(
+    val oldestMs = table.fs.getFileStatus(
       new Path(s"${table.cfg.path}/_graft/$oldest.commit.json")).getModificationTime
     val timeTrigger = System.currentTimeMillis() - oldestMs >= deltaSeconds * 1000
     if (numTrigger || timeTrigger) Some(table.compact(targetRows)) else None
@@ -162,17 +159,9 @@ object TableServices {
     * (DowngradeTable.scala). Version 1 is the only on-disk layout so far;
     * the validation contract matches the reference's:
     * downgrading to a NEWER version is an error, same-version is a no-op. */
-  def tableVersion(table: GraftTable): Int = {
-    val p = propsPath(table)
-    val fs = new Path(table.cfg.path).getFileSystem(
-      table.spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) CurrentVersion
-    else {
-      val in = fs.open(p)
-      val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-      new ObjectMapper().readTree(new String(bytes, "UTF-8")).get("version").asInt()
-    }
-  }
+  def tableVersion(table: GraftTable): Int =
+    TableProperties.readJson(table.fs, propsPath(table))
+      .fold(CurrentVersion)(_.get("version").asInt())
 
   def downgradeTable(table: GraftTable, toVersion: Int): Boolean = {
     val from = tableVersion(table)
@@ -197,11 +186,6 @@ object TableServices {
   private def propsPath(table: GraftTable): Path =
     new Path(s"${table.cfg.path}/_graft/table.properties.json")
 
-  private def writeVersion(table: GraftTable, v: Int): Unit = {
-    val fs = new Path(table.cfg.path).getFileSystem(
-      table.spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(propsPath(table), true)
-    out.write(s"""{"version": $v}""".getBytes("UTF-8"))
-    out.close()
-  }
+  private def writeVersion(table: GraftTable, v: Int): Unit =
+    TableProperties.writeJson(table.fs, propsPath(table), Map("version" -> v))
 }

@@ -7,7 +7,7 @@ import scala.collection.mutable
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Stats + identity of one data file committed to a [[GraftTable]].
   *
@@ -164,6 +164,7 @@ final case class Commit(
 final class Timeline(fs: FileSystem, tableDir: Path) {
 
   private val metaDir = new Path(tableDir, "_graft")
+  private val archDir = new Path(metaDir, "archive")
   private val mapper = new ObjectMapper()
 
   private def writeFileNode(arr: ArrayNode, f: FileMeta): Unit = {
@@ -218,15 +219,18 @@ final class Timeline(fs: FileSystem, tableDir: Path) {
 
   def exists(): Boolean = fs.exists(metaDir)
 
-  def instants(): Seq[String] =
-    if (!fs.exists(metaDir)) Seq.empty
-    else
-      fs.listStatus(metaDir)
-        .map(_.getPath.getName)
-        .filter(_.endsWith(".commit.json"))
-        .map(_.stripSuffix(".commit.json"))
-        .sortBy(_.toLong) // numeric, robust to any padding-width drift
-        .toSeq
+  /** One listing of `dir`, with no exists probe: a missing dir is empty. */
+  private def list(dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq catch { case _: java.io.FileNotFoundException => Nil }
+
+  private def metaNames(): Seq[String] = list(metaDir).map(_.getPath.getName)
+
+  /** The instants of the `suffix` markers among `names`, numerically sorted
+    * (robust to any padding-width drift). */
+  private def marked(names: Seq[String], suffix: String): Seq[String] =
+    names.filter(_.endsWith(suffix)).map(_.stripSuffix(suffix)).sortBy(_.toLong)
+
+  def instants(): Seq[String] = marked(metaNames(), ".commit.json")
 
   def latestInstant(): Option[String] = instants().lastOption
 
@@ -239,8 +243,8 @@ final class Timeline(fs: FileSystem, tableDir: Path) {
     * This is the bound [[liveFiles]] resolves `asOf = None` to, so
     * `read()` and a stream's `getOffset` agree by construction. */
   def headInstant(): Option[String] = {
-    val all = instants() ++ checkpoints()
-    if (all.isEmpty) None else Some(all.maxBy(_.toLong))
+    val names = metaNames()
+    (marked(names, ".commit.json") ++ marked(names, ".checkpoint.json")).maxByOption(_.toLong)
   }
 
   def nextInstant(): String = {
@@ -254,30 +258,23 @@ final class Timeline(fs: FileSystem, tableDir: Path) {
     * rolled-back instant numbers are never reused, so cached Commit objects
     * in other handles can never be silently re-bound to different data). */
   private def allInstants(): Seq[String] =
-    if (!fs.exists(metaDir)) Seq.empty
-    else fs.listStatus(metaDir)
-      .map(_.getPath.getName)
-      .collect {
-        case n if n.endsWith(".commit.json") => n.stripSuffix(".commit.json")
-        case n if n.endsWith(".inflight") => n.stripSuffix(".inflight")
-        case n if n.endsWith(".rolledback") => n.stripSuffix(".rolledback")
-        // a checkpoint pins the high-water mark even after every commit at
-        // or before it has been archived — instant numbers are never reused
-        case n if n.endsWith(".checkpoint.json") => n.stripSuffix(".checkpoint.json")
-      }
-      .sortBy(_.toLong).toSeq
+    metaNames().collect {
+      case n if n.endsWith(".commit.json") => n.stripSuffix(".commit.json")
+      case n if n.endsWith(".inflight") => n.stripSuffix(".inflight")
+      case n if n.endsWith(".rolledback") => n.stripSuffix(".rolledback")
+      // a checkpoint pins the high-water mark even after every commit at
+      // or before it has been archived — instant numbers are never reused
+      case n if n.endsWith(".checkpoint.json") => n.stripSuffix(".checkpoint.json")
+    }.sortBy(_.toLong)
 
   /** Instants reserved but not yet committed or rolled back, with each
     * `.inflight` marker's mtime (= reservation time) — their data dirs
     * belong to a writer that may still be running. */
   def inflightReservations(): Map[String, Long] =
-    if (!fs.exists(metaDir)) Map.empty
-    else fs.listStatus(metaDir)
-      .collect {
-        case s if s.getPath.getName.endsWith(".inflight") =>
-          s.getPath.getName.stripSuffix(".inflight") -> s.getModificationTime
-      }
-      .toMap
+    list(metaDir).collect {
+      case s if s.getPath.getName.endsWith(".inflight") =>
+        s.getPath.getName.stripSuffix(".inflight") -> s.getModificationTime
+    }.toMap
 
   /** Fence off a PRESUMED-DEAD writer: under the commit lock, tombstone the
     * instant iff its reservation is still in-flight and older than
@@ -531,12 +528,11 @@ final class Timeline(fs: FileSystem, tableDir: Path) {
     */
   def liveFiles(asOf: Option[String] = None,
       allowArchived: Boolean = false): Seq[FileMeta] = {
-    val committed = instants()
-    val cps = checkpoints()
+    val names = metaNames()
+    val committed = marked(names, ".commit.json")
+    val cps = marked(names, ".checkpoint.json")
     val bound = asOf.getOrElse {
-      val all = committed ++ cps
-      if (all.isEmpty) return Seq.empty
-      all.maxBy(_.toLong)
+      (committed ++ cps).maxByOption(_.toLong).getOrElse(return Seq.empty)
     }
     val cp = cps.filter(_ <= bound).lastOption
     // archived commits inside the replay range (cp, bound] would be
@@ -549,7 +545,7 @@ final class Timeline(fs: FileSystem, tableDir: Path) {
     // batch with the SAME offsets after a restart, and a
     // checkpointTimeline that archived the batch's range in between must
     // not wedge the stream forever (fuzz-found: StreamReplaySpec).
-    val archivedInRange = archivedInstants()
+    val archivedInRange = archived(names)
       .filter(i => i <= bound && cp.forall(i > _))
     if (archivedInRange.nonEmpty && !allowArchived)
       throw new IllegalArgumentException(
@@ -588,13 +584,7 @@ final class Timeline(fs: FileSystem, tableDir: Path) {
     }
   }
 
-  def checkpoints(): Seq[String] =
-    if (!fs.exists(metaDir)) Seq.empty
-    else fs.listStatus(metaDir)
-      .map(_.getPath.getName)
-      .filter(_.endsWith(".checkpoint.json"))
-      .map(_.stripSuffix(".checkpoint.json"))
-      .sortBy(_.toLong).toSeq
+  def checkpoints(): Seq[String] = marked(metaNames(), ".checkpoint.json")
 
   private val checkpointCache = mutable.HashMap.empty[String, Seq[FileMeta]]
 
@@ -620,24 +610,24 @@ final class Timeline(fs: FileSystem, tableDir: Path) {
     * instants are never archived (restore needs their commits hot).
     * Returns the number of commits archived. */
   def archive(): Int = {
-    val cps = checkpoints()
+    val names = metaNames()
+    val cps = marked(names, ".checkpoint.json")
     val cp = cps.lastOption.getOrElse(return 0)
+    val hot = marked(names, ".commit.json")
     // a savepoint sp replays from the newest checkpoint <= sp plus the
     // commits after it — those commits must stay hot (clean() and restore
     // both replay savepointed snapshots)
-    val needed = savepoints().flatMap { sp =>
+    val needed = marked(names, ".savepoint").flatMap { sp =>
       val cover = cps.filter(_ <= sp).lastOption
-      instants().filter(i => i <= sp && cover.forall(i > _))
+      hot.filter(i => i <= sp && cover.forall(i > _))
     }.toSet
     // the HEAD commit always stays hot: archiving it makes latestInstant()
     // regress to an older hot commit, so stream offsets stop short of the
     // real head (consumers silently never see the newest commits —
     // StreamReplaySpec seed-sweep-found) and rollback's latest-only check
     // binds to the wrong instant
-    val head = instants().lastOption
-    val victims = instants().filter(i => i <= cp && !needed.contains(i) &&
-      !head.contains(i))
-    val archDir = new Path(metaDir, "archive")
+    val victims = hot.filter(i => i <= cp && !needed.contains(i) &&
+      !hot.lastOption.contains(i))
     if (victims.nonEmpty) fs.mkdirs(archDir)
     victims.count { i =>
       fs.rename(new Path(metaDir, s"$i.commit.json"),
@@ -652,18 +642,19 @@ final class Timeline(fs: FileSystem, tableDir: Path) {
     committedInstants().filter(_ <= asOf).flatMap(i => readCommit(i).removes)
 
   /** Every committed instant, archived or hot, distinct and sorted. */
-  def committedInstants(): Seq[String] = (archivedInstants() ++ instants()).distinct.sorted
+  def committedInstants(): Seq[String] = {
+    val names = metaNames()
+    (archived(names) ++ marked(names, ".commit.json")).distinct.sorted
+  }
 
   /** Instants whose commit files were moved to `_graft/archive/`. */
-  def archivedInstants(): Seq[String] = {
-    val archDir = new Path(metaDir, "archive")
-    if (!fs.exists(archDir)) Seq.empty
-    else fs.listStatus(archDir)
-      .map(_.getPath.getName)
-      .filter(_.endsWith(".commit.json"))
-      .map(_.stripSuffix(".commit.json"))
-      .sortBy(_.toLong).toSeq
-  }
+  def archivedInstants(): Seq[String] =
+    marked(list(archDir).map(_.getPath.getName), ".commit.json")
+
+  /** [[archivedInstants]], listed only when the `_graft/` listing `names`
+    * shows an archive. */
+  private def archived(names: Seq[String]): Seq[String] =
+    if (names.contains(archDir.getName)) archivedInstants() else Nil
 
   // ------------------------------------------------------------ savepoints
 
@@ -675,13 +666,7 @@ final class Timeline(fs: FileSystem, tableDir: Path) {
     fs.create(new Path(metaDir, s"$instant.savepoint"), true).close()
   }
 
-  def savepoints(): Seq[String] =
-    if (!fs.exists(metaDir)) Seq.empty
-    else fs.listStatus(metaDir)
-      .map(_.getPath.getName)
-      .filter(_.endsWith(".savepoint"))
-      .map(_.stripSuffix(".savepoint"))
-      .sortBy(_.toLong).toSeq
+  def savepoints(): Seq[String] = marked(metaNames(), ".savepoint")
 
   def deleteSavepoint(instant: String): Unit = {
     fs.delete(new Path(metaDir, s"$instant.savepoint"), false)
