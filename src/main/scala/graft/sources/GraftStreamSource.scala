@@ -2,6 +2,8 @@ package graft.sources
 
 import graft.tables.{GraftTable, GraftTableConfig}
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession, SQLContext}
+import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit,
+  SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.types.StructType
@@ -17,13 +19,17 @@ import org.apache.spark.sql.types.StructType
   * With `cdc = true` (readStream option `graft.cdc`) each micro-batch is
   * instead the CHANGE IMAGES of the commit range (`_change_type` in
   * insert / update_preimage / update_postimage / delete) — the streaming
-  * CDC query. Table-service commits yield empty batches, not errors. */
+  * CDC query. Table-service commits yield empty batches, not errors.
+  *
+  * `Trigger.AvailableNow` drains to the head seen when the query starts
+  * (`prepareForTriggerAvailableNow`); commits that land later wait for the
+  * next query. */
 final class GraftStreamSource(
     spark: SparkSession,
     cfg: GraftTableConfig,
     override val schema: StructType,
     cdc: Boolean = false)
-    extends Source {
+    extends Source with SupportsTriggerAvailableNow {
 
   private val table = GraftTable(spark, cfg)
 
@@ -40,8 +46,18 @@ final class GraftStreamSource(
   // hot-only latest under-reports the head and the stream would stop
   // short of the newest data forever; headInstant is the same bound
   // read() resolves to, so batch reads and snapshot reads always agree
-  override def getOffset: Option[Offset] =
+  private def head: Option[LongOffset] =
     table.timeline.headInstant().map(i => LongOffset(i.toLong))
+
+  // the head recorded by prepareForTriggerAvailableNow; None = uncapped
+  @volatile private var availableNowHead: Option[Option[LongOffset]] = None
+
+  override def getOffset: Option[Offset] = head
+
+  override def prepareForTriggerAvailableNow(): Unit = availableNowHead = Some(head)
+
+  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 =
+    availableNowHead.getOrElse(head).orNull
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val begin = start.map(instantOf).getOrElse(graft.tables.Timeline.pad(0))

@@ -1036,7 +1036,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
   /** True unless the file's key-column bloom filter excludes EVERY key.
     * Conservative: any missing bloom or unsupported key type keeps the
     * file. */
-  private def bloomMayContain(p: Path, keys: Seq[Any]): Boolean = {
+  private[tables] def bloomMayContain(p: Path, keys: Seq[Any]): Boolean = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -1181,11 +1181,16 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
       // sizes every filter at parquet.bloom.filter.max.bytes (1 MiB) no
       // matter how few rows the file has — the 1000-commit aging stress
       // measured 13-row upsert files at 1,052,037 bytes each (99.9% bloom)
-      // and 74 GB for a 15k-row table's history. Adaptive keeps candidate
-      // filters during the write and stores the smallest one that meets
-      // the FPP for the ACTUAL key count.
+      // and 74 GB for a 15k-row table's history. Adaptive keeps a ladder of
+      // candidate filters during the write, halving from max.bytes (1 MiB),
+      // and stores the smallest that meets the 1% FPP for the file's
+      // distinct keys. Parquet's default 5 rungs stop at 64 KiB, a floor
+      // every small file paid; 10 rungs reach 2 KiB. `expected.ndv` would
+      // switch the adaptive writer off and fix one size per write, so a
+      // skewed partition's file would exceed the FPP.
       .option(s"parquet.bloom.filter.enabled#${cfg.keyField}", "true")
       .option("parquet.bloom.filter.adaptive.enabled", "true")
+      .option(s"parquet.bloom.filter.candidates.number#${cfg.keyField}", "10")
     // FsCalls phases are pure attribution (a volatile label the metered FS
     // reads) so S3CostModel can say WHICH commit step pays the metadata
     // bill — the reference's Glue suite exists to measure exactly that
@@ -2235,8 +2240,9 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     while (it.hasNext) {
       val f = it.next()
       val name = f.getPath.getName
-      // only visible parquet data files: committer sidecars (.crc,
-      // _SUCCESS) ride along with their data file's lifecycle
+      // only visible parquet data files: committer sidecars (.crc files,
+      // `_SUCCESS` markers of older writes) ride along with their data
+      // file's lifecycle
       if (f.isFile && name.endsWith(".parquet") &&
           !name.startsWith(".") && !name.startsWith("_")) {
         val rel = f.getPath.toUri.getPath.stripPrefix(rootStr).stripPrefix("/")
@@ -2391,7 +2397,7 @@ object GraftTable {
 
   /** Run a graft-internal write under FileOutputCommitter ALGORITHM 2:
     * task commit renames each output file straight into the destination
-    * dir; job commit only writes `_SUCCESS` — versus v1's task-dir rename
+    * dir and job commit does no per-file work — versus v1's task-dir rename
     * PLUS a serialized driver-side per-file merge (getFileStatus + rename
     * per file) at job commit. On an object store (rename = COPY+DELETE)
     * v1 is the single largest slice of the commit bill — S3CostModel
@@ -2399,12 +2405,16 @@ object GraftTable {
     * v1's reason to exist — readers must never see a partially-committed
     * output dir — is moot here: every graft output dir is INVISIBLE until
     * the timeline's atomic commit-file rename publishes it, and a failed
-    * write's dir is deleted wholesale by withReservedInstant. Scoped
-    * per-write (Spark folds writer options into the job's Hadoop conf);
-    * the session default and user writes are untouched. */
+    * write's dir is deleted wholesale by withReservedInstant. For the
+    * same reason job commit writes no `_SUCCESS` marker: the timeline,
+    * not a marker file, says what is committed, and the marker cost one
+    * create per write. Scoped per-write (Spark folds writer options into
+    * the job's Hadoop conf); the session default and user writes are
+    * untouched. */
   private[tables] def committerV2[T](w: org.apache.spark.sql.DataFrameWriter[T])
       : org.apache.spark.sql.DataFrameWriter[T] =
     w.option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
 
   /** Default ceiling for DRIVER-side commit-time footer harvesting; above
     * it the harvest runs as a Spark job (see the call sites). Overridable

@@ -179,6 +179,32 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.filter(col("_change_type") === "delete").count() == 1)
   }
 
+  test("Trigger.AvailableNow caps the stream at the head seen when the query starts") {
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+    import graft.sources.GraftStreamSource
+    import graft.tables.{GraftTable, GraftTableConfig}
+    val p = "/tmp/graft_spec/ds_available_now"
+    val tbl = GraftTable(spark, GraftTableConfig(p, "o_orderkey", "o_orderkey"))
+    tbl.dropIfExists()
+    val first = tbl.insert(orders.limit(50))
+    val src = new GraftStreamSource(spark, tbl.cfg, tbl.read().schema)
+    assert(src.getDefaultReadLimit == ReadLimit.allAvailable())
+    src.prepareForTriggerAvailableNow()
+    val capped = src.latestOffset(null, src.getDefaultReadLimit)
+    assert(capped == LongOffset(first.toLong))
+
+    // a commit after the query started does not move the capped offset
+    val second = tbl.upsert(orders.limit(10).withColumn("o_orderstatus", lit("U")))
+    assert(second > first)
+    assert(src.latestOffset(capped, src.getDefaultReadLimit) == capped)
+    // an uncapped source sees the new head
+    val live = new GraftStreamSource(spark, tbl.cfg, tbl.read().schema)
+    assert(live.latestOffset(null, live.getDefaultReadLimit) == LongOffset(second.toLong))
+    assert(live.getOffset.contains(LongOffset(second.toLong)))
+    tbl.dropIfExists()
+  }
+
   test("writeStream.format(graft): native sink upserts micro-batches exactly-once") {
     import org.apache.spark.sql.streaming.Trigger
     import graft.tables.{GraftTable, GraftTableConfig}
