@@ -102,19 +102,11 @@ object Ann extends QueryRegistry {
     val e = embs(s, dir).select(col("vec_id"), col("embedding"))
     val cents = centroids.getOrElse(Centroids.sample(e))
     // IVF build: assign each vector to its nearest centroid (one broadcast pass)
-    val wAssign = Window.partitionBy("vec_id").orderBy(desc("c_cos"), asc("c_id"))
-    val assigned = e.join(broadcast(cents), lit(true))
-      .withColumn("c_cos", round(expr("cosine_sim(embedding, ce)"), 6))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
+    val assigned = Centroids.rankByCosine(e, cents, "vec_id", "embedding")
       .select(col("vec_id"), col("embedding"), col("c_id").as("bucket"))
     // query side: probe the 2 nearest buckets
     val q = e.filter(col("vec_id") < 5).toDF("q_id", "qe")
-    val wProbe = Window.partitionBy("q_id").orderBy(desc("c_cos"), asc("c_id"))
-    val probes = q.join(broadcast(cents), lit(true))
-      .withColumn("c_cos", round(expr("cosine_sim(qe, ce)"), 6))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= 2)
+    val probes = Centroids.rankByCosine(q, cents, "q_id", "qe", 2)
       .select(col("q_id"), col("qe"), col("c_id").as("bucket"))
     val scored = assigned.join(broadcast(probes.withColumnRenamed("bucket", "bucket_p")),
         col("bucket") === col("bucket_p"))
@@ -134,32 +126,13 @@ object Ann extends QueryRegistry {
   // Scale: centroids are broadcast (k rows), assignment is an embarrassingly
   // parallel map, and the recenter is one (k × dim)-sized shuffle.
   def sKmeans(s: SparkSession, dir: String): DataFrame = {
-    val e = embs(s, dir).select(col("vec_id"), col("embedding"))
-    val q = e.select(col("vec_id"),
-      expr("transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))").as("qv"))
-      .cache()
-    val distExpr =
-      """aggregate(zip_with(qv, ce, (x, c) ->
-        |  (cast(x as double) / 1000000.0 - c) * (cast(x as double) / 1000000.0 - c)),
-        |  cast(0.0 as double), (a, v) -> a + v)""".stripMargin
-    def assign(cents: DataFrame): DataFrame = {
-      val w = Window.partitionBy("vec_id").orderBy(asc("dist"), asc("c_id"))
-      q.join(broadcast(cents), lit(true))
-        .withColumn("dist", expr(distExpr))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select("vec_id", "qv", "c_id")
-    }
-    def recenter(assigned: DataFrame): DataFrame =
-      assigned.select(col("c_id"), posexplode(col("qv")).as(Seq("pos", "x")))
-        .groupBy("c_id", "pos")
-        .agg((sum("x").cast("double") / count(lit(1)).cast("double") / lit(1000000.0)).as("mv"))
-        .groupBy("c_id")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, mv))), p -> p.mv)").as("ce"))
+    val q = embs(s, dir).select(col("vec_id"), Centroids.quantized).cache()
     val c0 = q.filter(col("vec_id") < 8)
       .select(col("vec_id").as("c_id"),
         expr("transform(qv, x -> cast(x as double) / 1000000.0)").as("ce"))
-    val a2 = assign(recenter(assign(c0)))
+    def assign(cents: DataFrame): DataFrame =
+      Centroids.nearestL2(q, cents).select("vec_id", "qv", "c_id")
+    val a2 = assign(Centroids.recenter(assign(c0)))
     a2.groupBy(col("c_id").as("cluster_id"))
       .agg(count(lit(1)).as("n_vecs"), sum("vec_id").as("id_sum"))
       .orderBy("cluster_id")
@@ -314,19 +287,11 @@ object Ann extends QueryRegistry {
     val ev = e.select(col("vec_id"),
       expr("transform(embedding, x -> cast(x as double))").as("v"))
     val cents = Centroids.sample(e)
-    // IVF coarse assignment + probes (the s_topk_ivf shape)
-    val wAssign = Window.partitionBy("vec_id").orderBy(desc("c_cos"), asc("c_id"))
-    val assigned = e.join(broadcast(cents), lit(true))
-      .withColumn("c_cos", round(expr("cosine_sim(embedding, ce)"), 6))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
+    // IVF coarse assignment + probes
+    val assigned = Centroids.rankByCosine(e, cents, "vec_id", "embedding")
       .select(col("vec_id"), col("c_id").as("bucket"))
     val q = e.filter(col("vec_id") < 5).toDF("q_id", "qe")
-    val wProbe = Window.partitionBy("q_id").orderBy(desc("c_cos"), asc("c_id"))
-    val probes = q.join(broadcast(cents), lit(true))
-      .withColumn("c_cos", round(expr("cosine_sim(qe, ce)"), 6))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= 2)
+    val probes = Centroids.rankByCosine(q, cents, "q_id", "qe", 2)
       .select(col("q_id"), col("c_id").as("bucket"))
     // PQ codebook + encode (the s_topk_pq shape)
     val subs = ev.select(col("vec_id"), explode(expr(
@@ -464,14 +429,8 @@ object Ann extends QueryRegistry {
   // pass as the IVF build; output is k rows at any corpus size.
   def sCentroidBalance(s: SparkSession, dir: String): DataFrame = {
     val e = embs(s, dir).select(col("vec_id"), col("embedding"))
-    val cents = Centroids.sample(e)
-    val wAssign = Window.partitionBy("vec_id").orderBy(desc("c_cos"), asc("c_id"))
-    val assigned = e.join(broadcast(cents), lit(true))
-      .withColumn("c_cos", round(expr("cosine_sim(embedding, ce)"), 6))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("c_id"))
-    val per = assigned.groupBy("c_id").agg(count(lit(1)).as("n_vectors"))
+    val per = Centroids.rankByCosine(e, Centroids.sample(e), "vec_id", "embedding")
+      .groupBy("c_id").agg(count(lit(1)).as("n_vectors"))
     val tot = per.agg(sum("n_vectors").cast("double").as("total"))
     per.crossJoin(broadcast(tot))
       .select(col("c_id"), col("n_vectors"),
@@ -627,14 +586,9 @@ object Ann extends QueryRegistry {
     GraftFunctions.register(s)
     val e = embs(s, dir).select(col("vec_id"), col("embedding"))
     val cents = Centroids.sample(e)
-    def assign(batch: DataFrame): DataFrame = {
-      val w = Window.partitionBy("vec_id").orderBy(desc("c_cos"), asc("c_id"))
-      batch.join(broadcast(cents), lit(true))
-        .withColumn("c_cos", round(expr("cosine_sim(embedding, ce)"), 6))
-        .withColumn("arn", row_number().over(w))
-        .filter(col("arn") === 1)
+    def assign(batch: DataFrame): DataFrame =
+      Centroids.rankByCosine(batch, cents, "vec_id", "embedding")
         .select(col("vec_id"), col("c_id").as("bucket"), col("c_cos").as("cos_c"))
-    }
     val tbl = GraftTable(s, GraftTableConfig(
       "/tmp/graft_tables/ivf_idx_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
       "vec_id", "vec_id"))
@@ -708,13 +662,9 @@ object Ann extends QueryRegistry {
   def sKnnGraph(s: SparkSession, dir: String): DataFrame = {
     val e = embs(s, dir).select(col("vec_id"), col("embedding"))
     val cents = Centroids.sample(e, Centroids.scaledK(e.count()))
-    val wAssign = Window.partitionBy("vec_id").orderBy(desc("c_cos"), asc("c_id"))
     // cached: the assignment (centroid scan + window) feeds both sides of
     // the pair join — uncached it runs twice
-    val assigned = e.join(broadcast(cents), lit(true))
-      .withColumn("c_cos", round(expr("cosine_sim(embedding, ce)"), 6))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") <= 2)
+    val assigned = Centroids.rankByCosine(e, cents, "vec_id", "embedding", 2)
       .select(col("vec_id"), col("embedding"), col("c_id").as("bucket"))
       .cache()
     val pairs = assigned.toDF("q_id", "qe", "bucket")
@@ -761,12 +711,7 @@ object Ann extends QueryRegistry {
   // compute, O(#centroids) output at any corpus size.
   def sClusterQuality(s: SparkSession, dir: String): DataFrame = {
     val e = embs(s, dir).select(col("vec_id"), col("embedding"))
-    val cents = Centroids.sample(e)
-    val w = Window.partitionBy("vec_id").orderBy(desc("c_cos"), asc("c_id"))
-    val assigned = e.join(broadcast(cents), lit(true))
-      .withColumn("c_cos", round(expr("cosine_sim(embedding, ce)"), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val assigned = Centroids.rankByCosine(e, Centroids.sample(e), "vec_id", "embedding")
       .select(col("c_id").as("cluster_id"),
         round(col("c_cos") * 1e6).cast("long").as("q6"))
     assigned.groupBy("cluster_id")
@@ -838,20 +783,14 @@ object Ann extends QueryRegistry {
     val e = embs(s, dir).select(col("vec_id"), col("embedding"))
     val n = e.count()
     val cents = Centroids.sample(e)
-    val wAssign = Window.partitionBy("vec_id").orderBy(desc("c_cos"), asc("c_id"))
-    // no .cache() on assigned/probesAll: the fused sweep below references
+    val nprobes = Seq(1L, 2L, 4L)
+    // no .cache() on assigned/probes: the fused sweep below references
     // each exactly once (inside the eager'd `scored` build)
-    val assigned = e.join(broadcast(cents), lit(true))
-      .withColumn("c_cos", round(expr("cosine_sim(embedding, ce)"), 6))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
+    val assigned = Centroids.rankByCosine(e, cents, "vec_id", "embedding")
       .select(col("vec_id"), col("embedding"), col("c_id").as("bucket"))
     val q = e.filter(col("vec_id") < 5).toDF("q_id", "qe")
-    val wProbe = Window.partitionBy("q_id").orderBy(desc("c_cos"), asc("c_id"))
-    val probesAll = q.join(broadcast(cents), lit(true))
-      .withColumn("c_cos", round(expr("cosine_sim(qe, ce)"), 6))
-      .withColumn("prn", row_number().over(wProbe))
-      .select(col("q_id"), col("qe"), col("c_id").as("bucket_p"), col("prn"))
+    val probes = Centroids.rankByCosine(q, cents, "q_id", "qe", nprobes.max.toInt)
+      .select(col("q_id"), col("qe"), col("c_id").as("bucket_p"), col("crn").as("prn"))
     val bf = topkBruteforceUnsorted(s, dir).select(col("q_id"), col("vec_id"))
     // ONE query for the whole sweep: an nprobe-np point's candidate set is
     // exactly the rows whose bucket PROBE RANK (prn) is <= np, so the
@@ -862,9 +801,7 @@ object Ann extends QueryRegistry {
     // cosine evaluations of the deepest point alone (1+1+2+2+4+4 vs 4
     // bucket-units). eager: `scored` feeds the rank and the scanned-count
     // subtrees, which AQE fires concurrently (GraftSession.eager doc).
-    val nprobes = Seq(1L, 2L, 4L)
     val npDf = broadcast(nprobes.toDF("nprobe"))
-    val probes = probesAll.filter(col("prn") <= nprobes.max.toInt)
     val scored = graft.GraftSession.eager(
       assigned.join(broadcast(probes), col("bucket") === col("bucket_p"))
         .filter(col("vec_id") =!= col("q_id"))

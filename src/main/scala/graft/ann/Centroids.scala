@@ -1,6 +1,7 @@
 package graft.ann
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deterministic FIXED-k centroid sampling shared by the IVF-style
@@ -85,6 +86,54 @@ object Centroids {
        |      COUNT(*) OVER () AS _n FROM e)
        |  WHERE _hr <= GREATEST($K, CAST(ceil(sqrt(_n)) AS BIGINT))""".stripMargin
 
+  /** Ranks every centroid of `cents` (c_id, ce) against each row's vector
+    * column `vec`, per row id `id`: `c_cos` = round6 cosine, rank `crn` by
+    * (c_cos desc, c_id asc), keeping ranks <= `n`. One broadcast cross
+    * join plus one window — the nearest-centroid assignment (n = 1),
+    * multi-assignment and probe ranking of every IVF-style operator. The
+    * DuckDB oracles restate it as
+    * `ROW_NUMBER() OVER (PARTITION BY id ORDER BY round(cos, 6) DESC, c_id)`.
+    * Needs `cosine_sim` registered ([[graft.functions.GraftFunctions]]). */
+  def rankByCosine(df: DataFrame, cents: DataFrame, id: String, vec: String,
+      n: Int = 1): DataFrame = {
+    val w = Window.partitionBy(id).orderBy(desc("c_cos"), asc("c_id"))
+    df.join(broadcast(cents), lit(true))
+      .withColumn("c_cos", round(expr(s"cosine_sim($vec, ce)"), 6))
+      .withColumn("crn", row_number().over(w))
+      .filter(col("crn") <= n)
+  }
+
+  /** An `embedding` column quantized to integer micro-units (`qv`), the
+    * exact arithmetic of the k-means step below. */
+  def quantized: Column =
+    expr("transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))")
+      .as("qv")
+
+  /** The k-means assignment step: each (vec_id, qv) row's nearest centroid
+    * of `cents` (c_id, ce: array<double>) by squared L2 over the quantized
+    * vector, distance ties broken by c_id; adds c_id, ce and `dist`. */
+  def nearestL2(q: DataFrame, cents: DataFrame): DataFrame = {
+    val w = Window.partitionBy("vec_id").orderBy(asc("dist"), asc("c_id"))
+    q.join(broadcast(cents), lit(true))
+      .withColumn("dist", expr(
+        """aggregate(zip_with(qv, ce, (x, c) ->
+          |  (cast(x as double) / 1000000.0 - c) * (cast(x as double) / 1000000.0 - c)),
+          |  cast(0.0 as double), (a, v) -> a + v)""".stripMargin))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+  }
+
+  /** The k-means recenter step: each centroid's new position (c_id, ce) is
+    * the exact integer sum of its members' `qv` divided by their count —
+    * order-independent, so bit-identical across runs and engines. A
+    * centroid with no members has no row. */
+  def recenter(assigned: DataFrame): DataFrame =
+    assigned.select(col("c_id"), posexplode(col("qv")).as(Seq("pos", "x")))
+      .groupBy("c_id", "pos")
+      .agg((sum("x").cast("double") / count(lit(1)).cast("double") / lit(1000000.0)).as("mv"))
+      .groupBy("c_id")
+      .agg(expr("transform(array_sort(collect_list(struct(pos, mv))), p -> p.mv)").as("ce"))
+
   /** Bounded-sample k-means refinement of the hash-rank centroid sample —
     * the "k-means|| on a sample" step SURVEY §5 promises for IVF recall at
     * scale. Hash-rank sampling bounds COST but not QUALITY (a random
@@ -94,14 +143,14 @@ object Centroids {
     * constant-size broadcast per step), starting from [[sample]]'s k
     * seeds.
     *
-    * Every step reuses s_kmeans' deterministic quantized arithmetic
-    * (Ann.scala sKmeans): embeddings quantize to integer micro-units,
-    * assignment breaks distance ties by centroid id, and recentering is an
-    * exact integer sum divided by the count — bit-reproducible across
-    * runs and engines. Standard Lloyd monotonicity holds: the training
-    * objective never increases. A centroid that loses every member keeps
-    * its previous position (FAISS empty-cluster convention, minus the
-    * random re-seed — determinism wins here).
+    * Every step is the [[nearestL2]] + [[recenter]] pair s_kmeans runs:
+    * embeddings quantize to integer micro-units, assignment breaks
+    * distance ties by centroid id, and recentering is an exact integer sum
+    * divided by the count — bit-reproducible across runs and engines.
+    * Standard Lloyd monotonicity holds: the training objective never
+    * increases. A centroid that loses every member keeps its previous
+    * position (FAISS empty-cluster convention, minus the random re-seed —
+    * determinism wins here).
     *
     * The ORACLE-verified operators keep the raw [[sample]] (mirroring
     * `iters` Lloyd steps in every IVF oracle would bloat the SQL beyond
@@ -109,36 +158,18 @@ object Centroids {
     * PipelineSpec (determinism + objective improvement + recall
     * non-degradation). */
   def refine(e: DataFrame, k: Int = K, iters: Int = 2, sampleN: Int = 2048): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val train = e.select(col("vec_id"),
-        expr("transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))")
-          .as("qv"),
+    val train = e.select(col("vec_id"), quantized,
         md5(col("vec_id").cast("string")).as("_hr"))
       .orderBy(hashRank("vec_id"): _*)
       .limit(sampleN)
       .select("vec_id", "qv")
       .cache()
-    val distExpr =
-      """aggregate(zip_with(qv, ce, (x, c) ->
-        |  (cast(x as double) / 1000000.0 - c) * (cast(x as double) / 1000000.0 - c)),
-        |  cast(0.0 as double), (a, v) -> a + v)""".stripMargin
     var cents = sample(e, k)
       .select(col("c_id"),
         expr("transform(ce, x -> cast(x as double))").as("ce"))
     for (_ <- 1 to iters) {
-      val w = Window.partitionBy("vec_id").orderBy(asc("dist"), asc("c_id"))
-      val assigned = train.join(broadcast(cents), lit(true))
-        .withColumn("dist", expr(distExpr))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select("vec_id", "qv", "c_id")
-      val recentered = assigned
-        .select(col("c_id"), posexplode(col("qv")).as(Seq("pos", "x")))
-        .groupBy("c_id", "pos")
-        .agg((sum("x").cast("double") / count(lit(1)).cast("double") / lit(1000000.0)).as("mv"))
-        .groupBy("c_id")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, mv))), p -> p.mv)").as("nce"))
-      cents = cents.join(recentered, Seq("c_id"), "left")
+      val moved = recenter(nearestL2(train, cents)).withColumnRenamed("ce", "nce")
+      cents = cents.join(moved, Seq("c_id"), "left")
         .select(col("c_id"), coalesce(col("nce"), col("ce")).as("ce"))
       // tiny (k rows): materialize each step so the loop's lineage stays flat
       cents = cents.sparkSession.createDataFrame(
@@ -151,19 +182,7 @@ object Centroids {
   /** Mean nearest-centroid squared distance of `e`'s vectors under
     * `cents` — the k-means objective, used to measure centroid quality
     * (lower is better). Same quantized arithmetic as [[refine]]. */
-  def objective(e: DataFrame, cents: DataFrame): Double = {
-    import org.apache.spark.sql.expressions.Window
-    val q = e.select(col("vec_id"),
-      expr("transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))").as("qv"))
-    val distExpr =
-      """aggregate(zip_with(qv, ce, (x, c) ->
-        |  (cast(x as double) / 1000000.0 - c) * (cast(x as double) / 1000000.0 - c)),
-        |  cast(0.0 as double), (a, v) -> a + v)""".stripMargin
-    val w = Window.partitionBy("vec_id").orderBy(asc("dist"), asc("c_id"))
-    q.join(broadcast(cents), lit(true))
-      .withColumn("dist", expr(distExpr))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+  def objective(e: DataFrame, cents: DataFrame): Double =
+    nearestL2(e.select(col("vec_id"), quantized), cents)
       .agg(avg("dist")).head().getDouble(0)
-  }
 }

@@ -62,9 +62,6 @@ object Dedup extends QueryRegistry {
       .select(col("doc_id"), explode(expr("shingle_hash(lower(text), 3)")).as("sh"))
   }
 
-  /** Exact Jaccard over pairs that share >= 1 shingle, optionally restricted
-    * to a candidate pair set (the LSH path — only candidates are verified,
-    * so the shingle join never expands beyond LSH buckets). */
   /** Hot-shingle document-frequency cap (standard blocked-join practice,
     * cf. Lee et al. 2022 / CCNet): a shingle shared by k docs contributes a
     * k²-row block to the self-join, so one ubiquitous stopword shingle
@@ -84,6 +81,18 @@ object Dedup extends QueryRegistry {
     * recomputing the shared subtree. */
   private def eager(df: DataFrame): DataFrame = GraftSession.eager(df)
 
+  /** The (doc_id, sh) rows of `sh` whose shingle appears in at most
+    * [[MaxShingleDf]] docs. The hot set is tiny (only ubiquitous
+    * shingles), so AQE broadcasts the anti-join. */
+  private def dropHotShingles(sh: DataFrame): DataFrame = {
+    val hot = sh.groupBy("sh").agg(count(lit(1)).as("df"))
+      .filter(col("df") > MaxShingleDf).select("sh")
+    sh.join(hot, Seq("sh"), "left_anti").select("doc_id", "sh")
+  }
+
+  /** Exact Jaccard over pairs that share >= 1 shingle, optionally restricted
+    * to a candidate pair set (the LSH path — only candidates are verified,
+    * so the shingle join never expands beyond LSH buckets). */
   private def jaccardPairs(sh: DataFrame, candidates: Option[DataFrame] = None): DataFrame = {
     val restricted = candidates match {
       case Some(cand) =>
@@ -93,11 +102,7 @@ object Dedup extends QueryRegistry {
         val docs = cand.select(col("da").as("doc_id"))
           .union(cand.select(col("db").as("doc_id"))).distinct()
         sh.join(broadcast(docs), "doc_id")
-      case None =>
-        val hot = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-          .filter(col("df") > MaxShingleDf).select("sh")
-        // hot is tiny (only ubiquitous shingles); AQE broadcasts the anti-join
-        sh.join(hot, Seq("sh"), "left_anti")
+      case None => dropHotShingles(sh)
     }
     // using-column joins put the join key FIRST in the output, so pin the
     // (doc_id, sh) order the positional toDF renames below depend on
@@ -164,11 +169,8 @@ object Dedup extends QueryRegistry {
 
   def dPrefixFilter(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh0 = shingles(s, dir)
-    val hot = sh0.groupBy("sh").agg(count(lit(1)).as("df"))
-      .filter(col("df") > MaxShingleDf).select("sh")
     // the capped token universe defines BOTH the prefixes and the Jaccard
-    val sh = eager(sh0.join(hot, Seq("sh"), "left_anti").select("doc_id", "sh"))
+    val sh = eager(dropHotShingles(shingles(s, dir)))
     val freq = sh.groupBy("sh").agg(count(lit(1)).as("f"))
     val wOrd = Window.partitionBy("doc_id").orderBy("f", "sh")
     val prefix = sh.join(freq, "sh")
@@ -270,10 +272,7 @@ object Dedup extends QueryRegistry {
   // the same keep-lowest convention as d_exact, restated incrementally.
   // Every batch doc is reported (kept or not) with its two dup flags.
   def dIncrDedup(s: SparkSession, dir: String): DataFrame = {
-    val sh = eager(shingles(s, dir))
-    val hot = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-      .filter(col("df") > MaxShingleDf).select("sh")
-    val shf = sh.join(hot, Seq("sh"), "left_anti").select("doc_id", "sh")
+    val shf = dropHotShingles(eager(shingles(s, dir)))
     val sizes = shf.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val probe = shf.filter(col("doc_id") % 2 === 1).toDF("b", "sh")
     val post = shf.toDF("o", "sh")
@@ -828,9 +827,7 @@ object Dedup extends QueryRegistry {
         array_distinct(expr(
           "transform(sequence(0, size(w)-3), i -> concat(w[i], ' ', w[i+1], ' ', w[i+2]))")))
         .otherwise(array().cast("array<string>"))).as("sh"))
-    val hot = shStr.groupBy("sh").agg(count(lit(1)).as("df"))
-      .filter(col("df") > MaxShingleDf).select("sh")
-    shStr.join(hot, Seq("sh"), "left_anti")
+    dropHotShingles(shStr)
   }
 
   def dMinhashEst(s: SparkSession, dir: String): DataFrame = {
@@ -1076,61 +1073,14 @@ object Dedup extends QueryRegistry {
 
   // --- d_dup_groups: resolve the near-dup PAIR graph into duplicate GROUPS
   // (connected components) — the step a real dedup pipeline needs after pair
-  // mining, since near-dup relations are not transitive. Min-label
-  // propagation to a fixpoint: each iteration is one shuffle join; cluster
-  // diameter bounds the iteration count (dup clusters are tiny, so this
-  // converges in 1-3 rounds at any corpus size). Oracle: recursive-CTE
-  // transitive closure in DuckDB.
-  def dDupGroups(s: SparkSession, dir: String): DataFrame = {
-    val pairs = eager(jaccardPairs(eager(shingles(s, dir)))
-      .filter(col("jac") >= 0.5)
-      .select(col("da"), col("db"))) // used twice by the edges union
-    val edges = eager(pairs.union(pairs.select(col("db"), col("da")))
-      .toDF("u", "v"))
-    // seed with min(self, direct neighbors) — one aggregation replaces what
-    // would otherwise be the whole first propagation round (join + union).
-    // Rounds are pinned via GraftSession.pinRows, not localCheckpoint(true):
-    // the CHECKSUM job doubles as the materializer, so a round costs ONE
-    // job instead of a checkpoint job plus a checksum job — and
-    // rdd.unpersist actually frees the superseded round's blocks
-    // (Dataset.unpersist on a localCheckpoint'd frame is a CacheManager
-    // no-op; the blocks lingered until a GC cycle). Same change CC's
-    // star-contraction rounds got in round 14.
-    var (labels, labelsRdd) = GraftSession.pinRows(edges
-      .groupBy(col("u").as("doc_id"))
-      .agg(min(col("v")).as("mn"))
-      .select(col("doc_id"), least(col("mn"), col("doc_id")).as("group_id")))
-    // min-label propagation converges when the label multiset stops moving;
-    // a single checksum aggregate detects that — no per-round compare join
-    // decimal sum: a long sum of 64-bit hashes overflows under ANSI mode
-    def checksum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(xxhash64(col("doc_id"), col("group_id"))
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head().getDecimal(0)
-    var prev = checksum(labels) // materializes the pinned seed
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < 20) {
-      val (propagated, propagatedRdd) = GraftSession.pinRows(labels
-        .join(edges, labels("doc_id") === edges("u"))
-        .select(col("v").as("doc_id"), col("group_id"))
-        .unionByName(labels)
-        .groupBy("doc_id").agg(min("group_id").as("group_id")))
-      val cs = checksum(propagated) // the round's ONE job: materializes it
-      // labels only ever decrease per doc, so an unchanged checksum means an
-      // unchanged assignment (collision odds ~2^-64 per round)
-      converged = cs == prev
-      prev = cs
-      labelsRdd.unpersist(blocking = false)
-      labels = propagated
-      labelsRdd = propagatedRdd
-      rounds += 1
-    }
-    // the pinned labels no longer reference either cache; the final pin is
-    // the returned result and is freed by the ContextCleaner once consumed
-    edges.unpersist()
-    pairs.unpersist()
-    labels.orderBy("doc_id")
-  }
+  // mining, since near-dup relations are not transitive. The same labels as
+  // d_neardup_clusters (the star-contraction fixpoint: each doc's component
+  // minimum, whatever the chain length), named `group_id`. Oracle:
+  // recursive-CTE transitive closure in DuckDB.
+  def dDupGroups(s: SparkSession, dir: String): DataFrame =
+    neardupClusterLabels(s, dir)
+      .select(col("doc_id"), col("cluster_id").as("group_id"))
+      .orderBy("doc_id")
 
   private val dDupGroupsSql =
     """WITH RECURSIVE
@@ -1389,15 +1339,11 @@ object Dedup extends QueryRegistry {
   // identical assignment + in-cluster pair scan in DuckDB (same round6
   // double math, same in-query ceil(sqrt(n)) centroid cut).
   def dSemdedup(s: SparkSession, dir: String): DataFrame = {
+    import graft.ann.Centroids
     graft.functions.GraftFunctions.register(s)
-    import org.apache.spark.sql.expressions.Window
     val e = embs(s, dir).select(col("vec_id"), col("embedding"))
-    val cents = graft.ann.Centroids.sample(e, graft.ann.Centroids.scaledK(e.count()))
-    val wAssign = Window.partitionBy("vec_id").orderBy(desc("c_cos"), asc("c_id"))
-    val assigned = eager(e.join(broadcast(cents), lit(true))
-      .withColumn("c_cos", round(expr("cosine_sim(embedding, ce)"), 6))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
+    val cents = Centroids.sample(e, Centroids.scaledK(e.count()))
+    val assigned = eager(Centroids.rankByCosine(e, cents, "vec_id", "embedding")
       .select(col("vec_id"), col("embedding"), col("c_id").as("bucket")))
       // feeds both sides of the pair join plus the final output
     val left = assigned.select(col("bucket"), col("vec_id").as("da"), col("embedding").as("ea"))

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.{GraftSession, QueryDef, QueryRegistry}
-import graft.text.TextOps.normText
+import graft.text.TextOps.{alphaCount, normText, wsTokenCount}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,7 +27,7 @@ object Curation extends QueryRegistry {
       .select(col("vec_id"), col("label"))
 
     val nChars = length(col("text")).cast("long")
-    val alpha = length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("long")
+    val alpha = alphaCount(col("text")).cast("long")
     val keepRate = when(col("lang") === "en", 80)
       .when(col("lang") === "zh", 50).otherwise(25)
     val wDedup = Window.partitionBy("fp").orderBy("doc_id")
@@ -71,10 +71,8 @@ object Curation extends QueryRegistry {
   // of the 1-row totals — O(sources) output at any corpus size; the rates
   // feed a residue sampler like x_sample_mix / the funnel's stage 3.
   def cMixturePlan(s: SparkSession, dir: String): DataFrame = {
-    val toks = when(trim(col("text")) === "", 0L)
-      .otherwise(size(split(trim(col("text")), "\\s+")).cast("long"))
     val perSrc = GraftSession.table(s, dir, "documents")
-      .select(col("source"), toks.as("n_tok"))
+      .select(col("source"), wsTokenCount(col("text")).as("n_tok"))
       .groupBy("source").agg(sum("n_tok").as("n_tokens"))
     val totals = perSrc.agg(
       sum("n_tokens").cast("double").as("total"), count(lit(1)).as("ns"))
@@ -108,10 +106,8 @@ object Curation extends QueryRegistry {
   // allocation round can redistribute it. Integer sums → one shared
   // double division + round(…,6): bit-stable, O(sources) output.
   def cEpochPlan(s: SparkSession, dir: String): DataFrame = {
-    val toks = when(trim(col("text")) === "", 0L)
-      .otherwise(size(split(trim(col("text")), "\\s+")).cast("long"))
     val perSrc = GraftSession.table(s, dir, "documents")
-      .select(col("source"), toks.as("n_tok"))
+      .select(col("source"), wsTokenCount(col("text")).as("n_tok"))
       .groupBy("source").agg(sum("n_tok").as("n_tokens"))
     val totals = perSrc.agg(
       sum("n_tokens").cast("double").as("total"), count(lit(1)).as("ns"))
@@ -159,9 +155,8 @@ object Curation extends QueryRegistry {
     val Budget = 2000L
     val d = GraftSession.table(s, dir, "documents")
     val m = d.select(col("doc_id"), col("lang"),
-      when(trim(col("text")) === "", 0L)
-        .otherwise(size(split(trim(col("text")), "\\s+")).cast("long")).as("toks"),
-      (length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("double") /
+      wsTokenCount(col("text")).as("toks"),
+      (alphaCount(col("text")).cast("double") /
         length(col("text")).cast("double")).as("q"))
       .withColumn("band", floor(col("q") * 64.0)) // q ∈ [0,1] ⇒ ≤65 bands
     val wLocal = Window.partitionBy("lang", "band")
@@ -207,8 +202,7 @@ object Curation extends QueryRegistry {
   // one shared double division, round(…,6) — bit-stable, O(sources).
   def cDedupMixture(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = when(trim(col("text")) === "", 0L)
-      .otherwise(size(split(trim(col("text")), "\\s+")).cast("long"))
+    val toks = wsTokenCount(col("text"))
     val wDedup = Window.partitionBy("fp").orderBy("doc_id")
     val perSrc = GraftSession.table(s, dir, "documents")
       .withColumn("fp", md5(normText(col("text"))))
@@ -275,7 +269,7 @@ object Curation extends QueryRegistry {
     val comps = graft.dedup.Dedup.neardupClusterLabels(s, dir)
     val q = GraftSession.table(s, dir, "documents").select(
       col("doc_id"), col("source"),
-      (length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("double") /
+      (alphaCount(col("text")).cast("double") /
         length(col("text")).cast("double")).as("q"))
     val w = Window.partitionBy("cluster_id").orderBy(desc("q"), asc("doc_id"))
     comps.join(q, "doc_id")
@@ -329,12 +323,10 @@ object Curation extends QueryRegistry {
   // only non-integer is the reported mean itself, one shared division.
   def cCurriculumPlan(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = when(trim(col("text")) === "", 0L)
-      .otherwise(size(split(trim(col("text")), "\\s+")).cast("long"))
     val perSrc = GraftSession.table(s, dir, "documents")
-      .select(col("source"), toks.as("n_tok"),
+      .select(col("source"), wsTokenCount(col("text")).as("n_tok"),
         length(col("text")).cast("long").as("chars"),
-        length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("long").as("alpha"))
+        alphaCount(col("text")).cast("long").as("alpha"))
       .groupBy("source")
       .agg(sum("n_tok").as("n_tokens"), sum("chars").as("sum_chars"),
         sum("alpha").as("sum_alpha"))
@@ -397,7 +389,7 @@ object Curation extends QueryRegistry {
     val i2 = tbl.insert(docsAll.filter(col("doc_id") >= mid), numFiles = 2)
 
     val nChars = length(col("text")).cast("long")
-    val alpha = length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("long")
+    val alpha = alphaCount(col("text")).cast("long")
     val keepRate = when(col("lang") === "en", 80)
       .when(col("lang") === "zh", 50).otherwise(25)
     val wDedup = Window.partitionBy("fp").orderBy("doc_id")
@@ -442,11 +434,9 @@ object Curation extends QueryRegistry {
     val docs = GraftSession.table(s, dir, "documents")
     val embIds = GraftSession.table(s, dir, "embeddings").select(col("vec_id"))
     val nChars = length(col("text")).cast("long")
-    val alpha = length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("long")
+    val alpha = alphaCount(col("text")).cast("long")
     val keepRate = when(col("lang") === "en", 80)
       .when(col("lang") === "zh", 50).otherwise(25)
-    val toks = when(trim(col("text")) === "", 0L)
-      .otherwise(size(split(trim(col("text")), "\\s+")).cast("long"))
     val wDedup = Window.partitionBy("fp").orderBy("doc_id")
     val staged = docs
       .withColumn("fp", md5(normText(col("text"))))
@@ -458,7 +448,7 @@ object Curation extends QueryRegistry {
       .join(embIds.withColumn("has_emb", lit(true)),
         col("doc_id") === col("vec_id"), "left")
       .withColumn("s_embedded", col("s_sample") && coalesce(col("has_emb"), lit(false)))
-      .withColumn("n_tok", toks)
+      .withColumn("n_tok", wsTokenCount(col("text")))
       .cache() // five stage aggregates read this once, not five corpus re-scans
     val stages = Seq(
       ("1_raw", lit(true)), ("2_dedup", col("s_dedup")),
@@ -516,8 +506,7 @@ object Curation extends QueryRegistry {
     val d = GraftSession.table(s, dir, "documents")
       .select(col("source"), col("lang"), col("n_chars"),
         md5(normText(col("text"))).as("fp"),
-        when(trim(col("text")) === "", 0L)
-          .otherwise(size(split(trim(col("text")), "\\s+")).cast("long")).as("tok"))
+        wsTokenCount(col("text")).as("tok"))
     val bySource = d.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
       sum(col("n_chars")).as("total_chars"),

@@ -1008,7 +1008,7 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
     MappingIndex.valueBucket(key.toString, cfg.numBuckets, keyType).toInt
   }
 
-  /** Pad an integral key to match keyStr/footerKeyStats normalization — an
+  /** Pad an integral key to match keyStr/footerKeyStatsOf normalization — an
     * unpadded Short/Byte key would fail every padded min/max range check
     * and silently prune all files. */
   private def padKey(k: Any): String = k match {
@@ -1464,12 +1464,6 @@ final class GraftTable(val spark: SparkSession, val cfg: GraftTableConfig) {
   /** Bucket id of one index value under B buckets, computed on the driver
     * ([[MappingIndex.valueBucket]]; engine parity pinned by TablesSpec). */
   private[graft] def siValueBucket(v: String, b: Int): Long = MappingIndex.valueBucket(v, b)
-
-  /** Instance form of [[GraftTable.footerKeyStatsOf]] bound to this
-    * table's key/stats config — the driver-side call sites. */
-  private def footerKeyStats(p: Path): Option[(String, String, Long, Map[String, ColStat])] =
-    GraftTable.footerKeyStatsOf(p, spark.sparkContext.hadoopConfiguration,
-      cfg.keyField, cfg.statsCols.toSet)
 
   private def writeCdc(df: DataFrame, instant: String): Unit =
     if (cfg.writeChangelog) graft.sources.FsCalls.withPhase("cdc_write") {

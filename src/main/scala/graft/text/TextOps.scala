@@ -29,6 +29,17 @@ object TextOps extends QueryRegistry {
     * `lower(trim(regexp_replace(text, '\s+', ' ', 'g')))`. */
   def normText(c: Column): Column = lower(trim(regexp_replace(c, "\\s+", " ")))
 
+  /** Whitespace-token count of a text column: 0 for blank text, else the
+    * pieces of the trimmed text split on whitespace runs. DuckDB twin:
+    * `CASE WHEN trim(text) = '' THEN 0
+    * ELSE len(string_split_regex(trim(text), '\s+')) END`. */
+  def wsTokenCount(c: Column): Column =
+    when(trim(c) === "", 0L).otherwise(size(split(trim(c), "\\s+")).cast("long"))
+
+  /** ASCII-letter count of a text column (an int; callers cast). DuckDB
+    * twin: `length(regexp_replace(text, '[^A-Za-z]', '', 'g'))`. */
+  def alphaCount(c: Column): Column = length(regexp_replace(c, "[^A-Za-z]", ""))
+
   private val normSql = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 
   // --- x_fingerprint: stable content fingerprint of the normalized text.
@@ -46,8 +57,7 @@ object TextOps extends QueryRegistry {
     d.select(
       col("doc_id"),
       length(col("text")).cast("long").as("n_chars_calc"),
-      when(trim(col("text")) === "", 0L)
-        .otherwise(size(split(trim(col("text")), "\\s+")).cast("long")).as("ws_tokens"),
+      wsTokenCount(col("text")).as("ws_tokens"),
       size(regexp_extract_all(col("text"), lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"), lit(0)))
         .cast("long").as("re_tokens"))
       .orderBy("doc_id")
@@ -65,11 +75,10 @@ object TextOps extends QueryRegistry {
   def xQuality(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val nChars = length(col("text")).cast("long")
-    val alpha = length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("long")
+    val alpha = alphaCount(col("text")).cast("long")
     val stops = size(regexp_extract_all(lower(col("text")),
       lit("\\b(the|a|an|and|or|of|to|in|is|for|on|with)\\b"))).cast("long")
-    val wsTokens = when(trim(col("text")) === "", 0L)
-      .otherwise(size(split(trim(col("text")), "\\s+")).cast("long"))
+    val wsTokens = wsTokenCount(col("text"))
     d.select(
       col("doc_id"),
       nChars.as("n_chars_calc"),
@@ -238,10 +247,8 @@ object TextOps extends QueryRegistry {
   // would push the dominant language of a 100 TB corpus through ONE task.
   def xPack(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = when(trim(col("text")) === "", 0L)
-      .otherwise(size(split(trim(col("text")), "\\s+")).cast("long"))
     val bucketed = docs(s, dir)
-      .withColumn("n_tok", toks)
+      .withColumn("n_tok", wsTokenCount(col("text")))
       .withColumn("bkt", floor(col("doc_id") / 1024L))
     val wLocal = Window.partitionBy("lang", "bkt").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -350,8 +357,7 @@ object TextOps extends QueryRegistry {
   def xSourceStats(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).select(col("doc_id"), col("source"),
       md5(normText(col("text"))).as("h"),
-      when(trim(col("text")) === "", 0L)
-        .otherwise(size(split(trim(col("text")), "\\s+")).cast("long")).as("n_tok"))
+      wsTokenCount(col("text")).as("n_tok"))
     val dupHashes = d.groupBy("h").agg(count(lit(1)).as("cnt"))
     d.join(dupHashes, Seq("h"))
       .groupBy("source")
@@ -701,9 +707,8 @@ object TextOps extends QueryRegistry {
   def xQualitySweep(s: SparkSession, dir: String): DataFrame = {
     val m = docs(s, dir).select(
       length(col("text")).cast("long").as("n_chars_c"),
-      length(regexp_replace(col("text"), "[^A-Za-z]", "")).cast("long").as("alpha"),
-      when(trim(col("text")) === "", 0L)
-        .otherwise(size(split(trim(col("text")), "\\s+")).cast("long")).as("toks"))
+      alphaCount(col("text")).cast("long").as("alpha"),
+      wsTokenCount(col("text")).as("toks"))
       .cache() // feeds both the sweep and the 1-row total
     val thr = m.sparkSession.range(1)
       .select(explode(array(lit(80), lit(81), lit(82), lit(83), lit(84))).as("p"))
@@ -1040,7 +1045,7 @@ object TextOps extends QueryRegistry {
   // decide each flag identically; pure per-row codegen, no shuffle.
   def xGopher(s: SparkSession, dir: String): DataFrame = {
     val t0 = trim(col("text"))
-    val nTok = when(t0 === "", 0L).otherwise(size(split(t0, "\\s+")).cast("long"))
+    val nTok = wsTokenCount(col("text"))
     val charsw = length(regexp_replace(t0, "\\s+", "")).cast("long")
     val hashes = (length(t0) - length(regexp_replace(t0, "#", ""))).cast("long")
     val stops = size(regexp_extract_all(lower(t0),
@@ -1085,8 +1090,7 @@ object TextOps extends QueryRegistry {
   def xDedupImpact(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).select(col("doc_id"), col("source"),
       md5(normText(col("text"))).as("h"),
-      when(trim(col("text")) === "", 0L)
-        .otherwise(size(split(trim(col("text")), "\\s+")).cast("long")).as("n_tok"))
+      wsTokenCount(col("text")).as("n_tok"))
     val keepers = d.groupBy("h").agg(min("doc_id").as("keeper"))
     d.join(keepers, Seq("h"))
       .groupBy("source")

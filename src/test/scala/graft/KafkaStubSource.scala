@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SQLContext}
+import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit,
+  SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
@@ -19,7 +21,8 @@ import org.apache.spark.sql.types._
   * verbatim. Records come from newline-delimited files under the
   * `stub.dir` option — one line per record, offsets are line numbers, so
   * restarts replay deterministically from the checkpointed offset exactly
-  * like the real consumer. */
+  * like the real consumer. `Trigger.AvailableNow` drains to the line count
+  * seen when the query starts, like [[graft.sources.GraftStreamSource]]. */
 class KafkaStubSource extends StreamSourceProvider with DataSourceRegister {
 
   override def shortName(): String = "kafka"
@@ -38,7 +41,7 @@ class KafkaStubSource extends StreamSourceProvider with DataSourceRegister {
       providerName: String,
       parameters: Map[String, String]): Source = {
     KafkaStubSource.lastOptions = parameters
-    new Source {
+    new Source with SupportsTriggerAvailableNow {
       private val dir = parameters("stub.dir")
       private val topic = parameters.getOrElse("subscribe", "stub")
 
@@ -55,6 +58,15 @@ class KafkaStubSource extends StreamSourceProvider with DataSourceRegister {
         val n = lines().size
         if (n == 0) None else Some(LongOffset(n.toLong))
       }
+
+      // the head recorded by prepareForTriggerAvailableNow; None = uncapped
+      @volatile private var availableNowHead: Option[Option[Offset]] = None
+
+      override def prepareForTriggerAvailableNow(): Unit =
+        availableNowHead = Some(getOffset)
+
+      override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 =
+        availableNowHead.getOrElse(getOffset).orNull
 
       override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
         val from = start.map(_.json().toLong).getOrElse(0L).toInt

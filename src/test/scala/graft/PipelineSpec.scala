@@ -117,6 +117,44 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cc(Seq((1L, 2L), (9L, 9L))) == Map(1L -> 1L, 2L -> 1L, 9L -> 9L))
   }
 
+  test("d_dup_groups labels a 40-document near-dup chain with its minimum doc_id") {
+    import spark.implicits._
+    // doc i holds words w(2i)..w(2i+9): neighbours share 6 of 8 shingles
+    // (Jaccard 0.6), docs two apart 4 of 8 (0.33) — so the jac >= 0.5
+    // pair graph is one chain of diameter 39, longer than any fixed
+    // propagation round budget a label loop might stop at
+    val n = 40
+    val dir = java.nio.file.Files.createTempDirectory("graft_dup_chain").toString
+    (0 until n).map { i =>
+      val text = (2 * i until 2 * i + 10).map(j => s"w$j").mkString(" ")
+      (1000L + i, text, "en", "src1", text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val groups = Dedup.dDupGroups(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(groups.keySet == (0 until n).map(1000L + _).toSet, s"docs: ${groups.keySet}")
+    val wrong = groups.filter(_._2 != 1000L)
+    assert(wrong.isEmpty, s"docs not labeled with the chain minimum: $wrong")
+  }
+
+  test("Centroids.rankByCosine ranks by (round6 cosine desc, c_id asc)") {
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val rows = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f))).toDF("vec_id", "embedding")
+    // c_id 3 and 7 are identical; c_id 1 has a slightly lower raw cosine to
+    // vec 1 that rounds to the same 1.0, so it ranks first on c_id
+    val cents = Seq((7L, Seq(1f, 0f)), (3L, Seq(1f, 0f)), (1L, Seq(1f, 0.0001f)),
+      (5L, Seq(0.6f, 0.8f)), (2L, Seq(0f, 1f))).toDF("c_id", "ce")
+    def ranked(n: Int): Seq[(Long, Long, Int)] =
+      graft.ann.Centroids.rankByCosine(rows, cents, "vec_id", "embedding", n)
+        .select("vec_id", "c_id", "crn").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    assert(ranked(5) == Seq((1L, 1L, 1), (1L, 2L, 5), (1L, 3L, 2), (1L, 5L, 4), (1L, 7L, 3),
+      (2L, 1L, 3), (2L, 2L, 1), (2L, 3L, 4), (2L, 5L, 2), (2L, 7L, 5)))
+    assert(ranked(2) == Seq((1L, 1L, 1), (1L, 3L, 2), (2L, 2L, 1), (2L, 5L, 2)))
+    assert(ranked(1) == Seq((1L, 1L, 1), (2L, 2L, 1)))
+  }
+
   test("star contraction on a 10k-diameter chain: O(log d) rounds where propagation needs d") {
     import spark.implicits._
     // the graph shape the star-contraction trade exists for: component
